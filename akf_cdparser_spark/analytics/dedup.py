@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .index_store import read_table, write_table
 from .text import tokens_col
 
 DEFAULT_MINHASH_K = 8
@@ -42,90 +43,74 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def _widen(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism floor for heavy per-row compute: when the
-    input arrives NARROWER than the cluster (a small parquet file is one
-    row group = one unsplittable scan task, so every per-doc HOF/gram pass
-    downstream would run single-threaded), hash-repartition on doc_id to
-    defaultParallelism. When the scan is already at least cluster-wide —
-    the normal case at scale — this is the identity, so no shuffle is ever
-    added to a large input (guide §2.5: no blanket repartition-for-
-    parallelism; the condition is derived from the actual plan width)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    """Parallelism floor for the batch gram pass: an input NARROWER than
+    the cluster (a small parquet file is one unsplittable row group) is
+    hash-repartitioned on doc_id to defaultParallelism; a cluster-wide
+    input — the normal case at scale — passes unchanged (guide §2.5). The
+    index probe does not use it: its batch is small by construction."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, "doc_id")
     return df
 
 
-def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct token n-gram shingles per document (posexplode + window
-    join-free construction via transform over token array).
-
-    The token array is MATERIALIZED as its own projection first: inside a
-    higher-order-function lambda, a repeated non-trivial child (here the
-    regex split of the whole document) is re-evaluated PER ELEMENT —
-    O(tokens^2) per doc — because codegen's common-subexpression
-    elimination does not reach into lambda bodies. Binding it to a column
-    (non-cheap alias with two consumers, so CollapseProject keeps it)
-    makes the split run once per doc: measured 5.8s -> 0.8s over the
-    sf0.1 corpus. Same trick as lse_elements / the q26 md5 binding.
-    Narrow inputs are widened first (``_widen``) so the per-doc gram pass
-    parallelizes even when the scan is one row group."""
-    toksed = _widen(docs).select("doc_id", tokens_col().alias("_toks"))
+def shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
+    """``(doc_id, sets)``: each document's distinct non-empty token n-gram
+    shingles as ONE array row. A document shorter than ``n`` tokens is one
+    shingle; empty and null text give an empty array, which has no band
+    keys (a row filter on the size would be pushed below the projection
+    and compute every array twice). The token array is bound to its own
+    column first: codegen's subexpression elimination does not reach into
+    lambda bodies, so the regex split would otherwise run once per
+    shingle (measured 5.8s -> 0.8s over sf0.1)."""
+    toksed = docs.select("doc_id", tokens_col().alias("_toks"))
     toks = F.col("_toks")
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    return (toksed
-            .select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
-            .filter(F.length("shingle") > 0))
+    return toksed.select(
+        "doc_id", F.array_remove(F.array_distinct(sh), "").alias("sets"))
 
 
-def minhash_signatures(docs: DataFrame, k: int = DEFAULT_MINHASH_K,
-                       n: int = 3,
-                       shingle_df: DataFrame | None = None) -> DataFrame:
-    """MinHash with the two-hash family h_i = md5_lo + i*md5_hi (one md5
-    per shingle); signature_i = min over the doc's shingles. All k hashes
-    are computed as COLUMNS of one shingle row and aggregated with k
-    element-wise mins in a single groupBy — the explode-by-hash-id
-    alternative multiplies shuffle row volume by k, which is the dominant
-    cost at corpus scale. Engine-portable (md5 + exact integer ops).
-    ``shingle_df`` lets callers that consume the shingle table for several
-    planes (the persisted index build/probe) pass ONE materialized copy
-    instead of re-running the gram pass per consumer."""
-    sh = shingle_df if shingle_df is not None else shingles(docs, n)
-    # ONE md5 per shingle; the k hash family is h_i = h1 + i*h2 over the
-    # two 32-bit md5 halves (Kirsch-Mitzenmacher construction). Values stay
-    # < 2^36 so there is no wrap anywhere — bit-identical in the DuckDB
-    # oracle. Cuts the per-shingle hashing cost k-fold.
-    md = F.md5("shingle")
-    h1 = F.conv(F.substring(md, 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(md, 9, 8), 16, 10).cast("long")
-    cols = [(h1 + F.lit(i) * h2).alias(f"hv{i}") for i in range(k)]
-    per_shingle = sh.select("doc_id", *cols)
-    return per_shingle.groupBy("doc_id").agg(
-        *[F.min(f"hv{i}").alias(f"m{i}") for i in range(k)])
-
-
-def lsh_band_keys(docs: DataFrame, k: int = DEFAULT_MINHASH_K,
-                  bands: int = DEFAULT_BANDS, n: int = 3,
-                  shingle_df: DataFrame | None = None) -> DataFrame:
-    """LSH banding: concatenate rows-per-band minhashes -> band_key.
-    Documents sharing any (band, band_key) are near-dup candidates. The
-    band keys derive from the wide signature row (no second shuffle); only
-    the final tiny (doc, band) explode leaves the aggregated row."""
+def _band_keys(sets: DataFrame, k: int, bands: int) -> DataFrame:
+    """The one MinHash signature path: ``sets`` rows (``doc_id``, ``sets``,
+    any passthrough columns) gain ``band`` and ``band_key``, one row per
+    band; an empty set has none. h_i = md5_lo + i*md5_hi (one md5 per
+    shingle; values < 2^36, so nothing wraps and the DuckDB oracle is
+    bit-identical); signature_i is an ``array_min`` over the row's own
+    shingle array, so no explode and no groupBy. The (h1, h2) array is a
+    projection with k consumers, so md5 runs once per shingle. A band key
+    is the md5 of its ``k // bands`` sorted minhashes."""
     rows_per_band = k // bands
-    wide = minhash_signatures(docs, k, n, shingle_df=shingle_df)
+    md = F.transform("sets", lambda s: F.md5(s))
+    hashed = sets.withColumn("_h", F.transform(md, lambda m: F.struct(
+        F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("h1"),
+        F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("h2"))))
+    sig = [F.array_min(F.transform(
+        "_h", lambda h: h["h1"] + F.lit(i) * h["h2"])) for i in range(k)]
     entries = [
         F.struct(
             F.lit(b).alias("band"),
             F.md5(F.concat_ws(",", F.sort_array(F.array(
-                *[F.col(f"m{b * rows_per_band + j}")
-                  for j in range(rows_per_band)])))).alias("band_key"))
+                *sig[b * rows_per_band:(b + 1) * rows_per_band]))))
+            .alias("band_key"))
         for b in range(bands)]
-    return (wide
-            .select("doc_id", F.explode(F.array(*entries)).alias("e"))
-            .select("doc_id", F.col("e.band").alias("band"),
-                    F.col("e.band_key").alias("band_key")))
+    return hashed.select(*sets.columns, F.inline(
+        F.when(F.size("sets") > 0, F.array(*entries))))
+
+
+def lsh_band_keys(docs: DataFrame, k: int = DEFAULT_MINHASH_K,
+                  bands: int = DEFAULT_BANDS, n: int = 3) -> DataFrame:
+    """LSH banding: ``(doc_id, band, band_key)``. Documents sharing any
+    (band, band_key) are near-dup candidates."""
+    return _band_keys(shingle_sets(_widen(docs), n), k, bands).select(
+        "doc_id", "band", "band_key")
+
+
+def _jaccard(a: str, b: str) -> "F.Column":
+    """Exact Jaccard of two distinct-element arrays, rounded to 6 dp."""
+    common = F.size(F.array_intersect(a, b))
+    return F.round(common / (F.size(a) + F.size(b) - common), 6) \
+        .alias("jaccard")
 
 
 def minhash_candidates(docs: DataFrame, k: int = DEFAULT_MINHASH_K,
@@ -133,36 +118,19 @@ def minhash_candidates(docs: DataFrame, k: int = DEFAULT_MINHASH_K,
     """Candidate near-dup pairs via band-key self-equi-join (a < b keeps
     each pair once), then EXACT Jaccard verification over shingle sets —
     LSH is a prefilter, the verdict is exact (same discipline as the crawl
-    bloom filter: approximate structures never decide membership)."""
-    # one materialized shingle table feeds the band keys, both sides of
-    # the verification join and the sizes (the write_minhash_index lesson:
-    # without it the gram pass re-executes once per plan reference)
-    sh = shingles(docs, n).localCheckpoint()
-    keys = lsh_band_keys(docs, k, bands, n, shingle_df=sh)
-    a = keys.alias("a")
-    b = keys.alias("b")
-    cand = (a.join(b, ["band", "band_key"])
+    bloom filter: approximate structures never decide membership). The
+    shingle arrays ride through the band join, so verification needs no
+    re-join against a shingle table and no materialized copy of it."""
+    keys = _band_keys(shingle_sets(_widen(docs), n), k, bands)
+    a, b = keys.alias("a"), keys.alias("b")
+    return (a.join(b, ["band", "band_key"])
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
             .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (cand
-             .join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-             .join(sh.alias("sb"),
-                   (F.col("doc_b") == F.col("sb.doc_id"))
-                   & (F.col("sa.shingle") == F.col("sb.shingle")))
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count("*").alias("n_common")))
-    return (inter
-            .join(sizes.withColumnRenamed("doc_id", "doc_a")
-                  .withColumnRenamed("n_sh", "n_a"), "doc_a")
-            .join(sizes.withColumnRenamed("doc_id", "doc_b")
-                  .withColumnRenamed("n_sh", "n_b"), "doc_b")
-            .select("doc_a", "doc_b",
-                    F.round(F.col("n_common")
-                            / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                            6).alias("jaccard")))
+                    F.col("b.doc_id").alias("doc_b"),
+                    F.col("a.sets").alias("sets_a"),
+                    F.col("b.sets").alias("sets_b"))
+            .dropDuplicates(["doc_a", "doc_b"])
+            .select("doc_a", "doc_b", _jaccard("sets_a", "sets_b")))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
@@ -178,43 +146,34 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     surviving pairs still counts every shingle, so scores stay exact; only
     pairs whose overlap is exclusively stop-shingles are missed (such pairs
     sit far below any useful threshold). ``None`` disables the cap.
-    The shingle table feeds five plan references (sizes, df filter, both
-    candidate sides, both verification sides) — materialized once."""
-    sh = shingles(docs, n).localCheckpoint()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    cand_sh = sh
+    The shingle sets feed the candidate shingles, the df filter and both
+    verification sides — materialized once."""
+    sets = shingle_sets(_widen(docs), n).localCheckpoint()
+    sh = sets.select("doc_id", F.explode("sets").alias("shingle"))
     if max_doc_freq is not None:
         rare = (sh.groupBy("shingle")
                 .agg(F.count("*").alias("df"))
                 .filter(F.col("df") <= max_doc_freq)
                 .select("shingle"))
-        cand_sh = sh.join(rare, "shingle", "left_semi")
-    cand = (cand_sh.alias("x").join(cand_sh.alias("y"), "shingle")
+        sh = sh.join(rare, "shingle", "left_semi")
+    cand = (sh.alias("x").join(sh.alias("y"), "shingle")
             .filter(F.col("x.doc_id") < F.col("y.doc_id"))
             .select(F.col("x.doc_id").alias("doc_a"),
                     F.col("y.doc_id").alias("doc_b"))
             .distinct())
-    inter = (cand
-             .join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-             .join(sh.alias("sb"),
-                   (F.col("doc_b") == F.col("sb.doc_id"))
-                   & (F.col("sa.shingle") == F.col("sb.shingle")))
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count("*").alias("n_common")))
-    return (inter
-            .join(sizes.withColumnRenamed("doc_id", "doc_a")
-                  .withColumnRenamed("n_sh", "n_a"), "doc_a")
-            .join(sizes.withColumnRenamed("doc_id", "doc_b")
-                  .withColumnRenamed("n_sh", "n_b"), "doc_b")
-            .withColumn("jaccard",
-                        F.round(F.col("n_common")
-                                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                                6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard"))
+
+    def side(c: str) -> DataFrame:
+        return sets.select(F.col("doc_id").alias(f"doc_{c}"),
+                           F.col("sets").alias(f"sets_{c}"))
+
+    return (cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
+            .select("doc_a", "doc_b", _jaccard("sets_a", "sets_b"))
+            .filter(F.col("jaccard") >= threshold))
 
 
 SIMHASH_BITS = 64
+# tokens per vote block: bounds the chunk x 64 vote matrix (8 MB here)
+SIMHASH_CHUNK_TOKENS = 1 << 14
 
 
 # Java-exact tokenization twins of tokens_col() for Python-side kernels:
@@ -247,7 +206,11 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     tokenizer is the Java-exact twin of tokens_col() (trim <= U+0020,
     ASCII \\s+), so null text emits no row and empty text tokenizes to
     the single empty token, exactly as explode(split(trim(text))).
-    Measured 2.0s -> 0.8s on the q26 noop leg at sf0.1."""
+    Measured 2.0s -> 0.8s on the q26 noop leg at sf0.1.
+
+    The tokens vote in blocks of ``SIMHASH_CHUNK_TOKENS`` (the per-bit
+    ``ones`` count is a sum, so blocks add up to the same votes), so the
+    vote matrix is at most chunk x 64 at any document length."""
     import hashlib
 
     import numpy as np
@@ -259,6 +222,7 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     out_schema = T.StructType([id_field,
                                T.StructField("simhash", T.LongType())])
     shifts = np.arange(64, dtype=np.uint64)
+    chunk = SIMHASH_CHUNK_TOKENS
 
     def run(batches):
         for b in batches:
@@ -277,7 +241,10 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
                      | int.from_bytes(d[:4], "big")
                      for d in (hashlib.md5(t.encode("utf-8")).digest()
                                for t in toks)], dtype=np.uint64)
-                ones = ((hs[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
+                ones = sum((((hs[at:at + chunk, None] >> shifts)
+                             & np.uint64(1)).sum(axis=0)
+                            for at in range(0, len(hs), chunk)),
+                           np.zeros(64, dtype=np.uint64))
                 sign = (2 * ones > len(toks)).astype(np.uint64)
                 packed = np.bitwise_or.reduce(sign << shifts)
                 take_idx.append(i)
@@ -559,45 +526,28 @@ def write_minhash_index(docs: DataFrame, path: str,
                         k: int = DEFAULT_MINHASH_K,
                         bands: int = DEFAULT_BANDS, n: int = 3) -> None:
     """Materialize the MinHash/LSH dedup index for INCREMENTAL ingestion —
-    the build-once/probe-many counterpart of ``minhash_candidates`` (same
-    pattern as ``similarity.write_ivf_index``). A nightly pipeline indexes
-    the accepted corpus ONCE; each new batch then probes it instead of
-    re-deduping the world.
+    the build-once/probe-many counterpart of ``minhash_candidates``. A
+    nightly pipeline indexes the accepted corpus ONCE; each new batch then
+    probes it instead of re-deduping the world. Two tables, each with its
+    recorded schema (``index_store``):
 
-    Layout: band keys written ``partitionBy("bkp")`` (the first hex byte
-    of the band_key, 256 directories) so a probe's broadcast join on the
-    partition column triggers dynamic partition pruning — a small batch
-    touches only the directories its own band keys land in, not the whole
-    index; plus the distinct shingle table and per-doc set sizes the exact
-    verifier needs.
-
-    The shingle table feeds all three outputs (band keys, the stored
-    shingles, the per-doc sizes), so it is materialized ONCE via
-    localCheckpoint instead of re-running the gram pass per output (3
-    scans -> 1; on a fault-tolerant cluster swap for persist or reuse the
-    written shingle parquet). The band write hash-distributes on the
-    partition column first (guide §6: cluster by partition key before a
-    partitioned write), so each ``bkp`` directory is written by one task
-    — 256 files instead of tasks x directories."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    sh = shingles(docs, n).localCheckpoint()
-    keys = lsh_band_keys(docs, k, bands, n, shingle_df=sh).withColumn(
-        "bkp", F.substring("band_key", 1, 2))
-    # the three outputs are independent once ``sh`` is materialized —
-    # submit them concurrently so the tail of one write back-fills the
-    # others' executors (guide §2.6 overlap-independent-jobs; Spark's
-    # scheduler runs the jobs side by side, the pool just issues them)
-    writes = (
-        lambda: (keys.repartition("bkp").write.partitionBy("bkp")
-                 .mode("overwrite").parquet(f"{path}/bands")),
-        lambda: sh.write.mode("overwrite").parquet(f"{path}/shingles"),
-        lambda: (sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-                 .write.mode("overwrite").parquet(f"{path}/sizes")),
-    )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(w) for w in writes]:
-            fut.result()
+    * ``{path}/sets`` — one ``(doc_id, sets)`` row per document, its
+      distinct shingles as an array: all the exact verifier needs.
+    * ``{path}/bands`` — ``(doc_id, band, band_key)``, computed from the
+      written ``sets`` (one gram pass) and written ``partitionBy("bkp")``
+      (the band_key's first hex byte, 256 directories), so a probe's
+      broadcast join on the partition column prunes to the directories
+      its own band keys land in. The write clusters by ``bkp`` first
+      (guide §6), so each directory is one task's file; the width is
+      explicit because AQE would coalesce a small index into one task
+      that writes all 256 files serially."""
+    write_table(shingle_sets(_widen(docs), n), f"{path}/sets")
+    keys = (_band_keys(read_table(docs.sparkSession, f"{path}/sets"),
+                       k, bands)
+            .select("doc_id", "band", "band_key",
+                    F.substring("band_key", 1, 2).alias("bkp")))
+    width = docs.sparkSession.sparkContext.defaultParallelism
+    write_table(keys.repartition(width, "bkp"), f"{path}/bands", "bkp")
 
 
 def probe_minhash_index(spark, path: str, new_docs: DataFrame,
@@ -611,41 +561,24 @@ def probe_minhash_index(spark, path: str, new_docs: DataFrame,
 
     Scale shape: the batch is small by construction (it is one ingestion
     increment), so the batch side BROADCASTS at every step and the
-    index-side scans never shuffle — the band join prunes partitions via
-    the bkp join key, the shingle verification joins
-    broadcast(candidate-pair x batch-shingles) against the stored shingle
-    table, and only generation-sized frames ever move. The batch shingle
-    table has three consumers (band keys, the verification fan-out, the
-    batch sizes), so it is materialized once via localCheckpoint instead
-    of re-running the batch gram pass per consumer."""
-    batch_sh = shingles(new_docs, n).localCheckpoint()
-    new_keys = (lsh_band_keys(new_docs, k, bands, n, shingle_df=batch_sh)
-                .withColumn("bkp", F.substring("band_key", 1, 2))
-                .withColumnRenamed("doc_id", "new_doc"))
-    idx = spark.read.parquet(f"{path}/bands")
-    cand = (idx.join(F.broadcast(new_keys), ["bkp", "band", "band_key"])
+    index-side scans never shuffle. The batch's band keys carry its
+    shingle arrays; their broadcast join against ``bands`` prunes
+    ``bkp`` partitions, and the candidate pairs (still carrying the batch
+    arrays) broadcast into the ``sets`` scan, where
+    ``size(array_intersect(...))`` is the exact overlap. The batch gram
+    pass runs once, inside the broadcast, with no eager barrier."""
+    new_keys = (_band_keys(shingle_sets(new_docs, n), k, bands)
+                .select(F.col("doc_id").alias("new_doc"),
+                        F.col("sets").alias("new_sets"), "band", "band_key",
+                        F.substring("band_key", 1, 2).alias("bkp")))
+    cand = (read_table(spark, f"{path}/bands")
+            .join(F.broadcast(new_keys), ["bkp", "band", "band_key"])
             .filter(F.col("doc_id") != F.col("new_doc"))
-            .select("new_doc", F.col("doc_id").alias("idx_doc"))
-            .distinct())
-    new_sh = batch_sh.withColumnRenamed("doc_id", "new_doc")
-    probe_fan = cand.join(new_sh, "new_doc").alias("p")
-    idx_sh = spark.read.parquet(f"{path}/shingles").alias("s")
-    inter = (idx_sh.join(F.broadcast(probe_fan),
-                         (F.col("s.doc_id") == F.col("p.idx_doc"))
-                         & (F.col("s.shingle") == F.col("p.shingle")))
-             .groupBy("new_doc", "idx_doc")
-             .agg(F.count("*").alias("n_common")))
-    new_sizes = new_sh.groupBy("new_doc").agg(F.count("*").alias("n_new"))
-    idx_sizes = (spark.read.parquet(f"{path}/sizes")
-                 .withColumnRenamed("doc_id", "idx_doc")
-                 .withColumnRenamed("n_sh", "n_idx"))
-    return (inter
-            .join(F.broadcast(new_sizes), "new_doc")
-            .join(idx_sizes, "idx_doc")
-            .select("new_doc", "idx_doc",
-                    F.round(F.col("n_common")
-                            / (F.col("n_new") + F.col("n_idx")
-                               - F.col("n_common")), 6).alias("jaccard")))
+            .select("new_doc", F.col("doc_id").alias("idx_doc"), "new_sets")
+            .dropDuplicates(["new_doc", "idx_doc"]))
+    return (read_table(spark, f"{path}/sets")
+            .join(F.broadcast(cand), F.col("doc_id") == F.col("idx_doc"))
+            .select("new_doc", "idx_doc", _jaccard("new_sets", "sets")))
 
 
 def cdc_chunk_stats(docs: DataFrame, k: int = 8, mask: int = 64,

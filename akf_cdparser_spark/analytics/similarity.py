@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .index_store import read_table, write_table
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -226,7 +228,7 @@ def _list_scores(emb_col, cents_col, norm_col=None):
     sits INSIDE the per-centroid lambda, and codegen CSE does not reach
     into lambda bodies, so an inline norm is re-folded once per centroid —
     O(n_lists * dim) instead of O(dim) (measured 1.91s -> 1.41s on the
-    sf0.1 assignment; same lambda-CSE class as the dedup.shingles fix)."""
+    sf0.1 assignment; same lambda-CSE class as the dedup.shingle_sets fix)."""
     own_norm = norm_col if norm_col is not None else _norm(emb_col)
     scored = F.transform(cents_col, lambda c: F.struct(
         F.round(_dot(emb_col, c["c_emb"])
@@ -326,9 +328,8 @@ def write_ivf_index(embeddings: DataFrame, path: str,
     ``cosine_topk_ivf`` (which re-derives the quantizer per query plan)."""
     cents = ivf_centroid_row(embeddings, n_lists)
     inv = ivf_inverted_lists(embeddings, n_lists, n_assign, centroid_row=cents)
-    inv.write.partitionBy("list_id").mode("overwrite") \
-        .parquet(f"{path}/lists")
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
+    write_table(inv, f"{path}/lists", "list_id")
+    write_table(cents, f"{path}/centroids")
 
 
 def cosine_topk_ivf_index(spark, path: str, queries: DataFrame,
@@ -343,7 +344,7 @@ def cosine_topk_ivf_index(spark, path: str, queries: DataFrame,
     tests/test_plans.py). Result contract matches ``cosine_topk_ivf``
     (corpus vector equal to the query_id is excluded, exact cosine at
     ``round_to`` dp, (cosine desc, vec_id asc) tie order)."""
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_table(spark, f"{path}/centroids")
     probes = (queries.withColumn("_nrm", _norm(F.col("q_emb")))
               .join(F.broadcast(cents))
               .withColumn("_probes", F.slice(
@@ -351,7 +352,7 @@ def cosine_topk_ivf_index(spark, path: str, queries: DataFrame,
                                norm_col=F.col("_nrm")), 1, n_probe))
               .select("query_id", "q_emb",
                       F.explode(F.col("_probes.list_id")).alias("list_id")))
-    inv = spark.read.parquet(f"{path}/lists")
+    inv = read_table(spark, f"{path}/lists")
     cands = (inv.join(F.broadcast(probes), "list_id")
              .filter(F.col("vec_id") != F.col("query_id"))
              .select("query_id", "q_emb", "vec_id", "embedding")

@@ -13,6 +13,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .index_store import read_table, write_table
+
 # deterministic tiny stopword lists for the language-ID heuristic
 DE_STOPWORDS = ("der", "die", "das", "und", "nicht", "mit", "ist", "von")
 EN_STOPWORDS = ("the", "and", "not", "with", "is", "of", "to", "a")
@@ -514,7 +516,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     # bind the token array to a projected column BEFORE the gram lambda:
     # passing the split expression itself into _word_grams re-embeds the
     # whole-document split once per element_at reference (13x per gram —
-    # the dedup.shingles lambda-CSE trap; measured 10x slower unbound)
+    # the dedup.shingle_sets lambda-CSE trap; measured 10x slower unbound)
     dg = (docs.select("doc_id", tokens_col().alias("_t"))
           .select("doc_id",
                   F.explode(_word_grams(n, F.col("_t"))).alias("g"))
@@ -1041,10 +1043,32 @@ def write_text_index(docs: DataFrame, path: str) -> None:
         .alias("token"))
         .filter(F.length("token") > 0)
         .withColumn("tkp", F.substring("token", 1, 1)))
-    postings.write.partitionBy("tkp").mode("overwrite").parquet(path)
+    write_table(postings, path, "tkp")
 
 
 BM25_SCALE = 1_000_000  # micro-units; k1 = 12/10, b = 3/4 (the standard 1.2/0.75)
+
+
+def _bm25_tokens(docs: DataFrame) -> DataFrame:
+    """``(doc_id, dl, _toks)``: lowercased non-empty whitespace tokens,
+    bound to a column first so the split runs once per document."""
+    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
+                    lambda t: F.length(t) > 0)
+    return (docs.select("doc_id", toks.alias("_toks"))
+            .select("doc_id", F.size("_toks").cast("long").alias("dl"),
+                    "_toks"))
+
+
+def _query_terms(terms: list[str]) -> list[str]:
+    return sorted(set(t.strip().lower() for t in terms if t.strip()))
+
+
+def _term_postings(spark, path: str, want: list[str]) -> DataFrame:
+    """The postings of ``want`` in a ``tkp``-partitioned index table; the
+    filter on the partition column prunes the scan to their partitions."""
+    return read_table(spark, path).filter(
+        F.col("tkp").isin(sorted({t[:1] for t in want}))
+        & F.col("token").isin(want))
 
 
 def bm25_rank(docs: DataFrame, terms: list[str], top_k: int = 20) -> DataFrame:
@@ -1077,12 +1101,8 @@ def bm25_rank(docs: DataFrame, terms: list[str], top_k: int = 20) -> DataFrame:
     candidates that matched at least one term — the corpus itself never
     shuffles. For build-once/probe-many, point it at tf-carrying postings
     (``write_text_index`` + a doc-length sidecar) instead of docs."""
-    want = sorted(set(t.strip().lower() for t in terms if t.strip()))
-    toks = (docs.select(
-        "doc_id",
-        F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                 lambda t: F.length(t) > 0).alias("_toks"))
-        .select("doc_id", F.size("_toks").cast("long").alias("dl"), "_toks"))
+    want = _query_terms(terms)
+    toks = _bm25_tokens(docs)
     # (doc, term) term frequencies for the query terms only
     tf = (toks.select("doc_id", "dl", F.explode("_toks").alias("token"))
           .filter(F.col("token").isin(want))
@@ -1144,14 +1164,12 @@ def keyword_search_index(spark, path: str, terms: list[str]) -> DataFrame:
     partitions (partition pruning — probes touch O(terms) partitions at
     any index size); the match is one groupBy counting distinct terms
     hit. Returns (doc_id, n_terms_matched) for full matches only."""
-    want = sorted(set(t.strip().lower() for t in terms if t.strip()))
-    idx = spark.read.parquet(path)
-    hits = (idx.filter(F.col("tkp").isin(
-        sorted({t[:1] for t in want})) & F.col("token").isin(want))
-        .groupBy("doc_id")
-        .agg(F.countDistinct("token").cast("int").alias("n_terms_matched"))
-        .filter(F.col("n_terms_matched") == len(want)))
-    return hits
+    want = _query_terms(terms)
+    return (_term_postings(spark, path, want)
+            .groupBy("doc_id")
+            .agg(F.countDistinct("token").cast("int")
+                 .alias("n_terms_matched"))
+            .filter(F.col("n_terms_matched") == len(want)))
 
 
 def write_bm25_index(docs: DataFrame, path: str) -> None:
@@ -1171,20 +1189,15 @@ def write_bm25_index(docs: DataFrame, path: str) -> None:
     df per query term is NOT persisted: it is a |terms|-row aggregate of
     the already-pruned candidate postings at probe time (exact, and
     avoids a second partitioned table)."""
-    toks = (docs.select(
-        "doc_id",
-        F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                 lambda t: F.length(t) > 0).alias("_toks"))
-        .select("doc_id", F.size("_toks").cast("long").alias("dl"), "_toks"))
+    toks = _bm25_tokens(docs)
     postings = (toks.select("doc_id", "dl", F.explode("_toks").alias("token"))
                 .groupBy("token", "doc_id", "dl")
                 .agg(F.count(F.lit(1)).cast("long").alias("tf"))
                 .withColumn("tkp", F.substring("token", 1, 1)))
-    postings.write.partitionBy("tkp").mode("overwrite") \
-        .parquet(path + "/postings")
-    stats = toks.agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                     F.sum("dl").cast("long").alias("total_dl"))
-    stats.write.mode("overwrite").parquet(path + "/stats")
+    write_table(postings, path + "/postings", "tkp")
+    write_table(toks.agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
+                         F.sum("dl").cast("long").alias("total_dl")),
+                path + "/stats")
 
 
 def bm25_rank_index(spark, path: str, terms: list[str],
@@ -1197,10 +1210,6 @@ def bm25_rank_index(spark, path: str, terms: list[str],
     with the corpus-scan path — so both paths return bit-identical
     (doc_id, n_terms, score_fp, rank) for the same corpus (asserted in
     tests and by the q111 oracle, which recomputes from the raw table)."""
-    want = sorted(set(t.strip().lower() for t in terms if t.strip()))
-    idx = spark.read.parquet(path + "/postings")
-    tf = (idx.filter(F.col("tkp").isin(sorted({t[:1] for t in want}))
-                     & F.col("token").isin(want))
+    tf = (_term_postings(spark, path + "/postings", _query_terms(terms))
           .select("doc_id", "dl", "token", "tf"))
-    stats = spark.read.parquet(path + "/stats")
-    return _bm25_score_tail(tf, stats, top_k)
+    return _bm25_score_tail(tf, read_table(spark, path + "/stats"), top_k)

@@ -68,6 +68,7 @@ never to the accumulated crawl state):
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 from typing import Iterator
 
 import numpy as np
@@ -373,8 +374,6 @@ class CrawlEngine:
                  catalog: str | None = None, namespace: str = "crawl",
                  wake_tiering: bool = True,
                  adaptive_in_run: bool = False):
-        from concurrent.futures import ThreadPoolExecutor
-
         self.spark = spark
         self.store = StateStore(spark, state_dir, catalog=catalog,
                                 namespace=namespace)
@@ -452,6 +451,12 @@ class CrawlEngine:
                 "spark.scheduler.pool", None)
             return fn(*args)
         return self._pool.submit(job)
+
+    def _drain_warm(self) -> None:
+        """Wait for the async cache warm-up (surfacing its errors)."""
+        futs, self._warm_futs = self._warm_futs, []
+        for f in futs:
+            f.result()
 
     def close(self) -> None:
         if self._rebuild_fut is not None:
@@ -680,6 +685,9 @@ class CrawlEngine:
         # (see X.slim_docs); the page index caches PRE-PARTITIONED on the
         # join key so per-generation link resolution never re-shuffles it
         if self._docs_slim is None or docs is not self._docs_ref:
+            # a warm-up still counting the old caches must finish before
+            # they are unpersisted or replaced
+            self._drain_warm()
             for df in (self._docs_slim, self._index):
                 if df is not None:
                     df.unpersist()
@@ -746,6 +754,9 @@ class CrawlEngine:
                 if stats["urls_scheduled"] == 0:
                     break
         finally:
+            # a generation that raised before draining the cache warm-up
+            # must not leave its count jobs running (nor mask the error)
+            wait(self._warm_futs)
             try:
                 self._drain_commits(pending_commits, block=True)
             finally:
@@ -899,22 +910,39 @@ class CrawlEngine:
         # schedule phase has been covering its wall) so the parse job reads
         # fully-cached docs/index frames instead of racing their first
         # materialization.
-        if self._warm_futs:
-            for f in self._warm_futs:
-                f.result()
-            self._warm_futs = []
-        fetched = resolve_docs(scheduled, docs)
-        parsed = X.extract_for_crawl(
-            fetched.select("doc_id", "doc_text")).persist()
-        cached.append(parsed)
-        n_parsed = parsed.count()  # the one action that materializes parse
-        _mark("parse")
+        try:
+            self._drain_warm()
+            fetched = resolve_docs(scheduled, docs)
+            parsed = X.extract_for_crawl(
+                fetched.select("doc_id", "doc_text")).persist()
+            cached.append(parsed)
+            # the one action that materializes parse
+            n_parsed = parsed.count()
+            _mark("parse")
 
-        links = discover_links(parsed, index)
-        pending_next = (_with_identity(links.select("url").distinct())
-                        .withColumn("next_fetch_time", F.lit(gen).cast("long"))
-                        .withColumn("depth", F.lit(gen))
-                        .select(_FCOLS))
+            links = discover_links(parsed, index)
+            pending_next = (_with_identity(links.select("url").distinct())
+                            .withColumn("next_fetch_time",
+                                        F.lit(gen).cast("long"))
+                            .withColumn("depth", F.lit(gen))
+                            .select(_FCOLS))
+
+            # 7. truncate next-gen state IN MEMORY (eager localCheckpoint of
+            # the cached plans: a block copy, not a recompute) so NOTHING
+            # durable sits on the critical path — every table write drains
+            # in the background and the commit record waits for all of them
+            # (_drain_commits), so resume only ever sees complete
+            # generations. deferred_next/newly_seen checkpoints were
+            # submitted BEFORE the parse job (see above) and have been
+            # running alongside it; only pending_next starts here.
+            # Checkpoint blocks are freed by the ContextCleaner when the
+            # Python refs die (each generation replaces the previous trio);
+            # heap pressure triggers the JVM GC that drives it, so
+            # steady-state storage stays bounded.
+            pending_ck = pending_next.localCheckpoint()
+        finally:
+            # a raising parse must not leave the early checkpoints running
+            wait(ck_early)
 
         fetch_log_new = (scheduled
                          .withColumn("doc_id", _doc_id_from_url())
@@ -925,19 +953,6 @@ class CrawlEngine:
                    .groupBy("category")
                    .agg(F.sum("call_count").alias("call_count"))
                    .withColumn("generation", F.lit(gen)))
-
-        # 7. truncate next-gen state IN MEMORY (eager localCheckpoint of the
-        # cached plans: a block copy, not a recompute) so NOTHING durable
-        # sits on the critical path — every table write drains in the
-        # background and the commit record waits for all of them
-        # (_drain_commits), so resume only ever sees complete generations.
-        # deferred_next/newly_seen checkpoints were submitted BEFORE the
-        # parse job (see above) and have been running alongside it; only
-        # pending_next starts here. Checkpoint blocks are freed by the
-        # ContextCleaner when the Python refs die (each generation replaces
-        # the previous trio); heap pressure triggers the JVM GC that drives
-        # it, so steady-state storage stays bounded.
-        pending_ck = pending_next.localCheckpoint()
         deferred_ck, seen_ck = [f.result() for f in ck_early]
         frontier_snapshot = (
             deferred_ck.withColumn("validated", F.lit(True))

@@ -26,14 +26,19 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
+    cores = 32 if n == "*" else int(n.split(",")[0])
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
+        shuffle_partitions = max(8, cores)
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # a read of more than 32 directories (a bucketed index) lists them in
+        # a Spark job: one task per core, not the default one per directory
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+                str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -3,6 +3,8 @@ SimHash / n-gram Jaccard) on a corpus with PLANTED duplicates, and ANN
 recall vs the brute-force baseline. (Value-level parity with DuckDB is
 covered by tests/test_oracle_parity.py.)"""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -125,6 +127,30 @@ def test_simhash_randomized_vs_python_reference(spark):
                spark.createDataFrame(rows, "doc_id string, text string")
            ).collect()}
     assert got == exp
+
+
+def test_simhash_chunked_votes_bit_equal_single_chunk(spark, monkeypatch):
+    """The vote matrix is built over blocks of ``SIMHASH_CHUNK_TOKENS``
+    tokens; the per-bit counts add up across blocks, so any block size
+    gives the single-block result bit for bit — across block boundaries,
+    partial last blocks, empty and whitespace-only text."""
+    import random as _random
+    rng = _random.Random(7)
+    vocab = [f"w{j}" for j in range(40)]
+    rows = [("empty", ""), ("blank", " \t\n "), ("one", "w1")]
+    for d, n in enumerate([2, 3, 4, 5, 7, 9, 10, 64, 1001]):
+        rows.append((f"r{d}", " ".join(vocab[rng.randrange(len(vocab))]
+                                       for _ in range(n))))
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+
+    def run(chunk):
+        monkeypatch.setattr(dedup, "SIMHASH_CHUNK_TOKENS", chunk)
+        return {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
+
+    single = run(1 << 30)
+    assert len(single) == len(rows)
+    for chunk in (1, 3, 4, 100):
+        assert run(chunk) == single, chunk
 
 
 def test_ann_lsh_recall_vs_bruteforce(spark):
@@ -865,6 +891,112 @@ def test_minhash_index_probe_self_is_empty(spark, tmp_path, planted):
     dedup.write_minhash_index(planted, path)
     probed = dedup.probe_minhash_index(spark, path, planted.limit(0))
     assert probed.count() == 0
+
+
+def _stage_infos(spark, group):
+    """(numTasks, name) of every stage the jobs of ``group`` ran, read
+    after the listener bus has delivered every pending event."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    out = []
+    for job in st.getJobIdsForGroup(group):
+        for sid in st.getJobInfo(job).stageIds:
+            info = st.getStageInfo(sid)
+            out.append((info.numTasks, info.name))
+    return out
+
+
+def test_minhash_probe_runs_no_per_directory_or_schema_job(spark, tmp_path):
+    """A probe of an index with more than 32 bucket directories lists them
+    in one task per core, not one per directory, and infers no schema:
+    no stage has as many tasks as there are directories, and no 1-task
+    stage comes from a parquet read. A plain ``spark.read.parquet`` of the
+    same table shows the inference stage, so the check is not vacuous."""
+    import random as _random
+    rng = _random.Random(11)
+    vocab = [f"v{j}" for j in range(80)]
+    rows = [(f"x{i:03d}", " ".join(rng.choice(vocab) for _ in range(25)))
+            for i in range(60)]
+    rows += [(f"y{i:03d}", text + " tail") for i, (_, text) in
+             enumerate(rows[:5])]
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    batch = ["x001", "y002", "x040"]
+    path = str(tmp_path / "mh_wide")
+    dedup.write_minhash_index(docs.filter(~F.col("doc_id").isin(batch)),
+                              path)
+    n_dirs = sum(d.startswith("bkp=") for d in os.listdir(f"{path}/bands"))
+    assert n_dirs > 32
+
+    sc = spark.sparkContext
+    sc.setJobGroup("mh_probe", "minhash probe")
+    try:
+        got = dedup.probe_minhash_index(
+            spark, path, docs.filter(F.col("doc_id").isin(batch))).collect()
+        sc.setJobGroup("mh_control", "inferred read")
+        spark.read.parquet(f"{path}/bands").columns
+    finally:
+        sc.setJobGroup("", "")
+    assert got  # the y-copies of x001/x002 are found
+    probe = _stage_infos(spark, "mh_probe")
+    assert probe and all(n != n_dirs for n, _ in probe), probe
+    assert not [s for s in probe if s[0] == 1 and s[1].startswith("parquet")]
+    control = _stage_infos(spark, "mh_control")
+    assert [s for s in control if s[0] == 1 and s[1].startswith("parquet")]
+
+
+def test_minhash_index_rewrite_with_other_doc_id_type(spark, tmp_path,
+                                                      planted):
+    """The recorded schema belongs to the last write: an index rebuilt at
+    the same path with long ``doc_id``s (after string ones) probes with
+    the new types, and a table without a recorded schema raises."""
+    from akf_cdparser_spark.analytics import index_store
+
+    path = str(tmp_path / "mh_retyped")
+    dedup.write_minhash_index(planted.filter(F.col("doc_id") != "d01"), path)
+    first = dedup.probe_minhash_index(
+        spark, path, planted.filter(F.col("doc_id") == "d01")).collect()
+    assert {r.idx_doc for r in first} >= {"d00", "d06"}
+
+    longs = planted.select(
+        F.substring("doc_id", 2, 2).cast("long").alias("doc_id"), "text")
+    dedup.write_minhash_index(longs.filter(F.col("doc_id") != 1), path)
+    got = {(r.new_doc, r.idx_doc): r.jaccard
+           for r in dedup.probe_minhash_index(
+               spark, path, longs.filter(F.col("doc_id") == 1)).collect()}
+    full = {(r.doc_a, r.doc_b): r.jaccard
+            for r in dedup.minhash_candidates(longs).collect()}
+    assert got == {(1, b if a == 1 else a): j for (a, b), j in full.items()
+                   if 1 in (a, b)}
+    assert got
+
+    os.remove(f"{path}/sets/{index_store.SCHEMA_FILE}")
+    with pytest.raises(FileNotFoundError):
+        dedup.probe_minhash_index(spark, path, longs)
+
+
+def test_minhash_probe_short_and_empty_docs_match_batch(spark, tmp_path):
+    """Documents shorter than n tokens are one shingle, empty and
+    whitespace-only ones have none: probing with them gives exactly the
+    cross pairs ``minhash_candidates`` finds over the union."""
+    rows = [("i0", "alpha beta"), ("i1", "alpha"), ("i2", ""),
+            ("i3", "alpha beta gamma delta"), ("i4", "   "),
+            ("n0", "alpha beta"), ("n1", "alpha"), ("n2", ""),
+            ("n3", " \t "), ("n4", "alpha beta gamma"), ("n5", None)]
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    is_new = F.col("doc_id").startswith("n")
+    path = str(tmp_path / "mh_short")
+    dedup.write_minhash_index(docs.filter(~is_new), path)
+    got = {(r.new_doc, r.idx_doc): r.jaccard
+           for r in dedup.probe_minhash_index(
+               spark, path, docs.filter(is_new)).collect()}
+    expected = {}
+    for r in dedup.minhash_candidates(docs).collect():
+        a, b = r.doc_a, r.doc_b
+        if a.startswith("n") != b.startswith("n"):
+            expected[(a, b) if a.startswith("n") else (b, a)] = r.jaccard
+    assert got == expected
+    assert got[("n0", "i0")] == 1.0 and got[("n1", "i1")] == 1.0
 
 
 def _py_bpe(texts, n_merges):

@@ -2,6 +2,8 @@
 sequential oracle, order invariance across parallelism, bloom/cuckoo
 prefilter exactness, robots gating, checkpoint/resume (BASELINE.json:2,14)."""
 
+import time
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -89,6 +91,54 @@ def test_resume_from_checkpoint(spark, tmp_path_factory, oracle_result):
                  for r in engine2.fetch_log().collect())
     assert [(r[0], r[1], r[2], r[3], r[4]) for r in log] == \
         oracle_result["fetch_log"]
+
+
+def test_raising_parse_leaves_no_jobs_and_resumes_exact(
+        spark, tmp_path_factory, oracle_result, monkeypatch):
+    """A generation whose parse raises: run() surfaces that exception, no
+    Spark job outlives it (the early checkpoints, submitted just before
+    the parse, are drained), and a fresh engine then resumes byte-exact.
+    The checkpoint submissions are delayed, so they are still pending
+    when the parse raises."""
+    class ParseFailed(RuntimeError):
+        pass
+
+    def fail(_docs):
+        raise ParseFailed("injected parse failure")
+
+    path = tmp_path_factory.mktemp("crawl_parse_raises")
+    docs = X.docs_dataframe(spark, N_DOCS, partitions=8)
+    engine = CrawlEngine(spark, str(path), N_DOCS, host_budget=HOST_BUDGET)
+    engine.bootstrap(SEEDS, ROBOTS)
+    engine.run(docs, 1)
+    submit_fg, early = engine._submit_fg, []
+
+    def delayed_fg(fn, *args):
+        def late(*a):
+            time.sleep(1.0)
+            return fn(*a)
+        early.append(submit_fg(late, *args))
+        return early[-1]
+
+    with monkeypatch.context() as m:
+        m.setattr(X, "extract_for_crawl", fail)
+        m.setattr(engine, "_submit_fg", delayed_fg)
+        with pytest.raises(ParseFailed):
+            engine.run(docs, GENERATIONS - 1)
+    assert early and all(f.done() for f in early)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    engine.close()
+
+    engine2 = CrawlEngine(spark, str(path), N_DOCS, host_budget=HOST_BUDGET)
+    engine2.run(docs, GENERATIONS - 1)
+    log = sorted((r.scheduled_seq, r.url_hash, r.url, r.doc_id, r.generation)
+                 for r in engine2.fetch_log().collect())
+    assert log == oracle_result["fetch_log"]
+    assert {r.url_hash: r.url for r in engine2.seen().collect()} == \
+        oracle_result["seen"]
+    engine2.close()
 
 
 def test_resume_with_larger_budget_stays_exact(spark, tmp_path_factory):
