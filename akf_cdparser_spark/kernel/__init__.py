@@ -6,7 +6,7 @@ any Spark dependency so that:
 
 * it unit-tests instantly (no JVM),
 * the Spark layer (operators/extract.py) can ship it to executors inside
-  vectorized ``mapInPandas`` batches — documents are small (a few hundred
+  vectorized ``mapInArrow`` batches — documents are small (a few hundred
   lines), so parallelism lives ACROSS documents, never within one.
 
 Reference citations (``file:line`` under /root/reference) appear in

@@ -2,7 +2,7 @@
 
 Design (SURVEY.md §7.0): the relational shell stays declarative (Catalyst
 sees scans/filters/joins/aggregations); the per-document sequential kernel
-runs inside Arrow-batched ``mapInPandas`` — documents are a few hundred
+runs inside Arrow-batched ``mapInArrow`` — documents are a few hundred
 lines, so parallelism lives across documents. No per-row Python UDFs, no
 RDDs, no driver-side loops:
 
@@ -20,9 +20,6 @@ RDDs, no driver-side loops:
 from __future__ import annotations
 
 import json
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -299,9 +296,8 @@ def spans_view(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _parse_profile(doc_id: str, text: str, n_media: int,
-                   with_coverage: bool = True) -> dict:
-    from ..kernel import parse_document
+def _parse_profile(doc_id: str, text: str, n_media: int) -> dict:
+    from ..kernel import coverage, parse_document
 
     try:
         rec, lineage, counts = parse_document(text or "")
@@ -335,12 +331,7 @@ def _parse_profile(doc_id: str, text: str, n_media: int,
             kurse.append({f.name: k.get(f.name) for f in KURS_STRUCT.fields})
 
     typed = _typed_projections(rec)
-
-    if with_coverage:
-        from ..kernel import coverage
-        unparsed_chars, fulltext_chars = coverage.coverage_stats(rec)
-    else:
-        unparsed_chars = fulltext_chars = None
+    unparsed_chars, fulltext_chars = coverage.coverage_stats(rec)
 
     return {
         **typed,
@@ -565,30 +556,33 @@ def extract_records(docs: DataFrame) -> DataFrame:
     return extract_records_slim(slim_docs(docs))
 
 
-def extract_records_slim(slim: DataFrame,
-                         with_coverage: bool = True) -> DataFrame:
+def extract_records_slim(slim: DataFrame) -> DataFrame:
     """(doc_id, doc_text, n_media) -> extracted records (see
     ``extract_records``); entry point for callers that pre-slim the store.
-    ``with_coverage=False`` skips the A4 unparsed-coverage subtraction
-    (~25% of per-doc CPU) for pipelines that don't consume that plane —
-    the crawl loop runs it separately as a QA query, not per fetch."""
+    Output batches are built with pyarrow directly, one ``pa.array`` per
+    ``RECORDS_SCHEMA`` column (call counts as item lists) — no pandas
+    frame and no object-column inference on the Python->JVM hop, the same
+    boundary optimization as ``docs_from_synth`` and ``extract_for_crawl``."""
 
-    cols = [f.name for f in RECORDS_SCHEMA.fields]
+    def run(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _parse_profile(doc_id, text, int(n_media), with_coverage)
-                for doc_id, text, n_media in zip(pdf["doc_id"], pdf["doc_text"],
-                                                 pdf["n_media"])
-            ]
-            out = pd.DataFrame(rows)
-            for c in cols:
-                if c not in out.columns:
-                    out[c] = None
-            yield out[cols]
+        schema = to_arrow_schema(RECORDS_SCHEMA)
+        for b in batches:
+            rows = [_parse_profile(doc_id, text, n_media)
+                    for doc_id, text, n_media in zip(
+                        b.column("doc_id").to_pylist(),
+                        b.column("doc_text").to_pylist(),
+                        b.column("n_media").to_pylist())]
+            for r in rows:
+                if r.get("call_counts") is not None:
+                    r["call_counts"] = list(r["call_counts"].items())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([r.get(f.name) for r in rows], f.type)
+                 for f in schema], schema=schema)
 
-    return slim.mapInPandas(run, RECORDS_SCHEMA)
+    return slim.mapInArrow(run, RECORDS_SCHEMA)
 
 
 CRAWL_PARSE_SCHEMA = T.StructType([

@@ -2369,7 +2369,7 @@ def q47_unparsed_coverage(spark, sf_dir):
     """A4 validator coverage diff (ref lib/validator.js:21-58): share of the
     cleaned fulltext no extractor consumed. Oracle: the pinned table computed
     by the SEQUENTIAL local kernel (scripts/gen_pinned_oracles.py) — the
-    driver gate verifies the distributed path (mapInPandas + Arrow) against
+    driver gate verifies the distributed path (mapInArrow) against
     an independent in-process run; drift gate in
     tests/test_pinned_oracles.py, deep checks in tests/test_coverage.py."""
     recs = _records(spark)

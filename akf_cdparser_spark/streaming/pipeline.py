@@ -5,7 +5,7 @@ needed for parity), but the 100 TB engine also ingests continuously:
 
 * ``stream_extract`` — ``readStream`` over a docs directory (new parquet
   files = newly fetched documents) -> the SAME Arrow extraction kernel ->
-  append sink. Batch and streaming share one operator (mapInPandas works
+  append sink. Batch and streaming share one operator (mapInArrow works
   unchanged on streaming DataFrames).
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation over
   an events stream (late data bounded by the watermark).

@@ -77,6 +77,33 @@ def test_errors_never_fail_job(spark):
     assert len(out) == 1  # row exists whatever happened
 
 
+def test_arrow_record_batches_equal_row_builder(spark):
+    """``extract_records`` builds its Arrow batches column by column; every
+    row must equal the one Spark makes from ``_parse_profile``'s dict —
+    lineage, call counts, typed arrays and coverage included — on a corpus
+    with an empty document and truncated pages whose records carry
+    ``_errors``."""
+    htmls = {fixtures.doc_id_for(i): fixtures.synth_html(i, N)
+             for i in range(N)}
+    htmls["empty/0000"] = ""
+    for i in (6, 18):
+        html = fixtures.synth_html(i, 4000)
+        htmls[f"cut/{i:04d}"] = html[: len(html) * 3 // 10]
+    docs, expected, n_errors = [], [], 0
+    for doc_id, html in sorted(htmls.items()):
+        spans = fixtures.html_to_spans(html)
+        n_media = sum(s["kind"] == "media" for s in spans)
+        docs.append((doc_id, spans))
+        row = X._parse_profile(doc_id, fixtures.spans_to_text(spans), n_media)
+        n_errors += row["error"] is not None
+        expected.append(row)
+    assert n_errors >= 2
+    want = spark.createDataFrame(expected, X.RECORDS_SCHEMA).collect()
+    got = (X.extract_records(spark.createDataFrame(docs, X.DOCS_SCHEMA))
+           .orderBy("doc_id").collect())
+    assert got == want
+
+
 def test_multimodal_plumbing(spark):
     docs = X.docs_dataframe(spark, N)
     media = multimodal.synth_media(spark, docs).cache()

@@ -72,12 +72,27 @@ def test_dict_longest_first_and_letter_guard():
     assert not guard.is_hit
 
 
-def test_matching_mode_config_misspelled_corpus():
+def test_matching_mode_config_misspelled_corpus(tmp_path, monkeypatch,
+                                                request):
     """The ldist config surface (persons.set_matching_mode /
     AKF_DICT_MATCHING): a misspelled title ('Porf. Dr.') is missed by exact
     matching but classified under the fuzzy mode; exact stays the default
-    (reference parity, lib/parser_persons.js:52-53)."""
+    (reference parity, lib/parser_persons.js:52-53). The title table is
+    the embedded one plus the entry the misspelling is close to, supplied
+    through ``AKF_DICTFILES``, so the test does not depend on which
+    dictionary files the host has."""
+    import json
+
     from akf_cdparser_spark.kernel import persons
+
+    titles = [*dicts._FALLBACK_TITLES,
+              "Generaldirektor-Stellvertreter Dipl.-Ing."]
+    (tmp_path / "dict_titles.json").write_text(
+        json.dumps({"rows": [[t] for t in titles]}), encoding="utf-8")
+    monkeypatch.setenv("AKF_DICTFILES", str(tmp_path))
+    dicts.load_dictionaries.cache_clear()
+    # the next test loads the host's tables again
+    request.addfinalizer(dicts.load_dictionaries.cache_clear)
 
     line = "Generaldirektor-Stellvertretre Dipl.-Ing. Klaus Maier, Stuttgart"
     assert persons.MATCHING_MODE == "normal"
