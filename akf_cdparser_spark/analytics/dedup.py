@@ -346,6 +346,9 @@ def _dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
                 break
         prev = cur
         prev_edges = edges
+    else:
+        raise RuntimeError(
+            f"dup_clusters (star) did not converge in {max_iter} rounds")
     # star fixpoint: each non-minimum node has exactly its component min as
     # neighbor; minima label themselves
     point = edges.groupBy("u").agg(F.min("v").alias("label"))
@@ -372,7 +375,8 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25,
     adopts the min label among itself and its neighbors; converges in
     O(component diameter) rounds (near-dup components are shallow: dup
     clusters are cliques or short chains, so 2-4 rounds in practice, with
-    ``max_iter`` as a hard stop). Each round is one equi-join + groupBy on
+    ``max_iter`` as a hard stop that raises rather than returning
+    unconverged labels). Each round is one equi-join + groupBy on
     (node, label) pairs — never materializes components on the driver; the
     per-round ``localCheckpoint`` truncates the iterative plan.
 
@@ -408,6 +412,10 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25,
         labels = new_labels
         if not changed:
             break
+    else:
+        edges.unpersist()
+        raise RuntimeError(
+            f"dup_clusters did not converge in {max_iter} rounds")
     edges.unpersist()
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return (labels.join(sizes, "label")

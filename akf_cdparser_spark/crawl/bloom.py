@@ -24,8 +24,8 @@ path can never leak a seen URL past the exact check.
 
 Format versioning: kinds are ``'bloom2'`` / ``'cuckoo2'`` (v2 = cuckoo blob
 with the 4-byte overflow-count header + the ``exact`` column). Probes REJECT
-unknown kinds instead of misparsing an old blob; the engine treats v1 shards
-as absent and rebuilds.
+unknown kinds instead of misparsing an old blob, so a store written in an
+older format fails loudly; rebuild its shards with ``build_shards``.
 
 A shard whose insert-rate churn between rebuilds exceeds
 ``CHURN_RATE_THRESHOLD`` is rebuilt as a cuckoo filter; a dense bloom (fill

@@ -100,13 +100,16 @@ SEEN_SCHEMA = T.StructType([
 
 _FCOLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
+# the seen-index shards are rebuilt (asynchronously) every this many
+# generations; in between, the residual anti-join covers the newer deltas
+BLOOM_REBUILD_EVERY = 2
+
 # frontier snapshots carry the deferred/pending split flag plus, for
 # deferred rows, the wake generation (earliest generation the row could
 # possibly be scheduled — see _schedule_tagged's _delay bound). Rows sleep
 # outside the per-generation scheduling until their wake generation, so
 # the politeness windows run over O(generation) rows instead of the whole
-# accumulated frontier. Legacy snapshots without the column read as NULL
-# -> wake 0 -> awake (idempotent, just un-optimized for one generation).
+# accumulated frontier.
 FRONTIER_SNAP_SCHEMA = T.StructType(
     list(FRONTIER_SCHEMA.fields) + [T.StructField("validated", T.BooleanType()),
                                     T.StructField("wake_gen", T.LongType())])
@@ -119,9 +122,18 @@ def _with_identity(df: DataFrame) -> DataFrame:
             .withColumn("host", host_of("url")))
 
 
-def seeds_frontier(spark: SparkSession, seeds: list[dict]) -> DataFrame:
-    df = spark.createDataFrame(
-        [(s["url"],) for s in seeds], T.StructType([T.StructField("url", T.StringType())]))
+def seeds_frontier(spark: SparkSession,
+                   seeds: list[dict] | DataFrame) -> DataFrame:
+    """Seed rows at generation 0. ``seeds`` is a list[{"url": ...}]
+    (in-memory seed lists) or a DataFrame with a ``url`` column
+    (distributed seed sets — sitemap discovery, recrawl epochs — never
+    collected into Python)."""
+    if isinstance(seeds, DataFrame):
+        df = seeds.select("url")
+    else:
+        df = spark.createDataFrame(
+            [(s["url"],) for s in seeds],
+            T.StructType([T.StructField("url", T.StringType())]))
     return (_with_identity(df)
             .withColumn("next_fetch_time", F.lit(0).cast("long"))
             .withColumn("depth", F.lit(0))
@@ -369,11 +381,7 @@ def resolve_docs(scheduled: DataFrame, docs_slim: DataFrame) -> DataFrame:
 class CrawlEngine:
     def __init__(self, spark: SparkSession, state_dir: str, n_docs: int,
                  host_budget: int = 4, n_shards: int = 16, n_salts: int = 4,
-                 bloom_rebuild_every: int = 2,
-                 shuffle_partitions: int | None = None,
-                 catalog: str | None = None, namespace: str = "crawl",
-                 wake_tiering: bool = True,
-                 adaptive_in_run: bool = False):
+                 catalog: str | None = None, namespace: str = "crawl"):
         self.spark = spark
         self.store = StateStore(spark, state_dir, catalog=catalog,
                                 namespace=namespace)
@@ -381,28 +389,9 @@ class CrawlEngine:
         self.host_budget = host_budget
         self.n_shards = n_shards
         self.n_salts = n_salts
-        # wake_tiering=False is the measurement control for the tier's
-        # benefit (every deferred row stays awake and re-enters every
-        # generation's merge/window passes — the pre-tier behavior; output
-        # is identical, scheduling cost becomes frontier-proportional).
-        self.wake_tiering = wake_tiering
-        # see run(): AQE off during the loop by default — the engine
-        # manages width/skew itself and AQE's query-stage jobs are pure
-        # per-generation latency here
-        self.adaptive_in_run = adaptive_in_run
-        # (generation, phase_label, seconds) per _generation pass — always
-        # recorded (append to a list, negligible), read by the scaling/
-        # phase-evidence scripts without parsing debug stdout
+        # (generation, phase_label, seconds) per _generation pass, read by
+        # the benchmark and the scaling/phase-evidence scripts
         self.phase_log: list[tuple[int, str, float]] = []
-        # stale shards are safe: the probe is exact AS OF the shard build,
-        # and the residual anti-join against the post-build deltas covers
-        # the rest — rebuilding every K generations (asynchronously) only
-        # trades a slightly larger delta union for K-1 fewer rebuild jobs
-        self.bloom_rebuild_every = max(1, bloom_rebuild_every)
-        # scheduling frames are small relative to cluster width — a capped
-        # shuffle width avoids paying task overhead on near-empty partitions;
-        # None = auto-sized per generation from the last scheduled count
-        self.shuffle_partitions = shuffle_partitions
         self._pool = ThreadPoolExecutor(max_workers=8)
         # shard_id -> n_items at the last rebuild (tiny metadata, drives the
         # churn-based cuckoo spill)
@@ -485,30 +474,20 @@ class CrawlEngine:
     def bootstrap(self, seeds, robots_rules: list[dict],
                   seen: DataFrame | None = None,
                   host_budgets: DataFrame | None = None) -> None:
-        # seeds are PENDING (validated=False: not yet seen-checked /
-        # robots-gated — re-validation is idempotent). Writing the flag at
-        # gen 0 keeps the frontier schema identical across generations,
-        # which the Iceberg backend requires (overwritePartitions does no
-        # schema evolution); legacy snapshots without the column still read
-        # via the explicit snapshot schema + NULL-coalesce in _load_frontier.
-        #
-        # ``seeds`` is a list[{"url": ...}] (driver-side seed lists) or a
-        # DataFrame with a ``url`` column (distributed seed sets — sitemap
-        # discovery, recrawl epochs — never collected to the driver).
+        # seeds (see ``seeds_frontier``) are PENDING (validated=False: not
+        # yet seen-checked / robots-gated — re-validation is idempotent).
+        # Writing the flag at gen 0 keeps the frontier schema identical
+        # across generations, which the Iceberg backend requires
+        # (overwritePartitions does no schema evolution).
         #
         # ``seen`` seeds the gen-0 seen delta: the EPOCH-BOUNDARY carry.
         # A recrawl epoch starts from the previous epoch's seen set minus
         # the stale URLs (``carry_seen_for_recrawl``), so refetches flow
         # through the ordinary probe/schedule path with no tombstone logic
-        # in the append-only within-epoch machinery.
-        if isinstance(seeds, DataFrame):
-            base = (_with_identity(seeds.select("url"))
-                    .withColumn("next_fetch_time", F.lit(0).cast("long"))
-                    .withColumn("depth", F.lit(0))
-                    .select(_FCOLS))
-        else:
-            base = seeds_frontier(self.spark, seeds)
-        frontier = (base
+        # in the append-only within-epoch machinery. The carry is indexed
+        # into gen-0 seen shards at once, so the first generations probe it
+        # instead of anti-joining all of it as a residual delta.
+        frontier = (seeds_frontier(self.spark, seeds)
                     .withColumn("validated", F.lit(False))
                     .withColumn("wake_gen", F.lit(None).cast("long")))
         self.store.write("frontier", frontier, 0)
@@ -518,6 +497,10 @@ class CrawlEngine:
                  if seen is not None
                  else self._empty(SEEN_SCHEMA).repartition(1))
         self.store.write("seen", seen0, 0)
+        if seen is not None:
+            written = self.store.read("seen", 0, schema=SEEN_SCHEMA)
+            self.store.write("bloom_shards", bloom.build_shards(
+                written.select("url_hash"), self.n_shards), 0)
         # ``host_budgets`` (host, budget — see crawl_delay_budgets) is
         # politeness DATA: persisted once here, read back by every run()
         # and resume, never a constructor arg, so wake_gen bounds derived
@@ -543,8 +526,6 @@ class CrawlEngine:
         corpus-sized) and still scales to 4x cluster width for large
         generations. With AQE disabled in run(), this IS the adaptive
         coalescing for the scheduling plane."""
-        if self.shuffle_partitions:
-            return self.shuffle_partitions
         cores = self.spark.sparkContext.defaultParallelism
         if not last_scheduled:
             return cores
@@ -553,24 +534,18 @@ class CrawlEngine:
     # -- shard / delta lifecycle ---------------------------------------------
 
     def _load_shards(self, start_gen: int) -> None:
-        """Adopt the newest committed v2 seen-index shards <= start_gen;
-        older-format shards (no exact column / v1 kinds) are treated as
-        absent and rebuilt rather than misparsed."""
+        """Adopt the newest seen-index shards <= start_gen."""
         if self._shards_df is not None:
             self._shards_df.unpersist()
         self._shards_df, self._shard_gen = None, None
         self._shard_counts = {}
         for g in range(start_gen, -1, -1):
-            if not self.store.exists("bloom_shards", g):
-                continue
-            df = self.store.read("bloom_shards", g)
-            if "exact" in df.columns:
-                kinds = {r["kind"] for r in df.select("kind").distinct().collect()}
-                if kinds <= set(bloom.V2_KINDS):
-                    self._shards_df = df.persist()
-                    self._shard_gen = g
-                    self._shard_counts = bloom.shard_counts(df)
-            break  # only the newest shards matter; stale-format => rebuild
+            if self.store.exists("bloom_shards", g):
+                self._shards_df = self.store.read(
+                    "bloom_shards", g, schema=bloom.SHARD_SCHEMA).persist()
+                self._shard_gen = g
+                self._shard_counts = bloom.shard_counts(self._shards_df)
+                return
 
     def _load_recent(self, start_gen: int) -> None:
         lo = 0 if self._shard_gen is None else self._shard_gen + 1
@@ -599,14 +574,12 @@ class CrawlEngine:
         waited futures were submitted EARLIER to the same FIFO pool, so
         they can never be queued behind the rebuild worker that blocks on
         them."""
-        if gen % self.bloom_rebuild_every or self._rebuild_fut is not None:
+        if gen % BLOOM_REBUILD_EVERY or self._rebuild_fut is not None:
             return
         prev = dict(self._shard_counts)
         deps = tuple(wait_for)
 
         def job(G=gen, prev_counts=prev):
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "crawl_background")
             for d in deps:
                 d.result()
             # explicit gens 0..G: never races a newer delta mid-write
@@ -617,7 +590,7 @@ class CrawlEngine:
             self.store.write("bloom_shards", shards, G)
             return G
 
-        self._rebuild_fut = self._pool.submit(job)
+        self._rebuild_fut = self._submit_bg(job)
 
     def _adopt_rebuild(self, block: bool = False) -> None:
         fut = self._rebuild_fut
@@ -626,7 +599,8 @@ class CrawlEngine:
         g = fut.result()
         self._rebuild_fut = None
         old = self._shards_df
-        self._shards_df = self.store.read("bloom_shards", g).persist()
+        self._shards_df = self.store.read(
+            "bloom_shards", g, schema=bloom.SHARD_SCHEMA).persist()
         self._shard_gen = g
         self._shard_counts = bloom.shard_counts(self._shards_df)
         for stale in [k for k in self._recent if k <= g]:
@@ -667,11 +641,8 @@ class CrawlEngine:
         # re-plans each of the ~dozen per-generation materializations into
         # extra query-stage jobs — measured 10-15% of generation wall in
         # pure orchestration latency (interleaved ABAB, 64k and 8k legs).
-        # ``adaptive_in_run=True`` restores AQE for deployments that want
-        # runtime re-planning anyway (e.g. un-salted foreign frontiers).
         prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled")
-        if not self.adaptive_in_run:
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         robots = self.store.read("robots", 0)
         # Crawl-delay budgets are bootstrap-time DATA (written once at gen
         # 0), so resume always schedules under the exact budgets in force
@@ -714,10 +685,10 @@ class CrawlEngine:
         # when they were written. Resuming with a LARGER budget would make
         # sleeping rows wake too late and silently diverge from the
         # sequential oracle. The manifest records the budget per commit; on
-        # mismatch (or a legacy manifest that predates the field) every
-        # deferred row wakes at the next generation — one un-tiered,
-        # frontier-proportional scheduling pass, exact by construction,
-        # after which fresh wake_gen values are derived under the new budget.
+        # mismatch every deferred row wakes at the next generation — one
+        # un-tiered, frontier-proportional scheduling pass, exact by
+        # construction, after which fresh wake_gen values are derived under
+        # the new budget.
         if stats0.get("host_budget") != self.host_budget:
             deferred = deferred.withColumn("wake_gen", F.lit(0).cast("long"))
         seq_end = int(stats0.get("seq_end", 0))
@@ -767,30 +738,20 @@ class CrawlEngine:
                 self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         return totals
 
-    def _load_frontier(self, gen: int) -> tuple[DataFrame | None, DataFrame]:
+    def _load_frontier(self, gen: int) -> tuple[DataFrame, DataFrame]:
         fr = self.store.read("frontier", gen, schema=FRONTIER_SNAP_SCHEMA)
-        # bootstrap/legacy snapshots lack the flag on disk; with the explicit
-        # read schema those rows surface as NULL — treat them as pending
-        # (re-validation is idempotent and exact). Legacy wake surfaces as
-        # NULL -> 0 -> immediately awake (exact, just un-tiered once).
-        v = F.coalesce(F.col("validated"), F.lit(False))
-        deferred = fr.filter(v).select(
-            *_FCOLS, F.coalesce("wake_gen", F.lit(0)).alias("wake_gen"))
-        return deferred, fr.filter(~v).select(_FCOLS)
+        deferred = fr.filter(F.col("validated")).select(*_FCOLS, "wake_gen")
+        return deferred, fr.filter(~F.col("validated")).select(_FCOLS)
 
-    def _generation(self, gen: int, deferred: DataFrame | None,
+    def _generation(self, gen: int, deferred: DataFrame,
                     pending: DataFrame, robots: DataFrame, docs: DataFrame,
                     seq_start: int, index: DataFrame):
-        import os as _os
-        _dbg = _os.environ.get("AKF_CRAWL_DEBUG")
         _t = time.time()
 
         def _mark(label):
             nonlocal _t
             now = time.time()
             self.phase_log.append((gen, label, now - _t))
-            if _dbg:
-                print(f"    gen{gen} {label}: {now - _t:.2f}s", flush=True)
             _t = now
 
         cached: list[DataFrame] = []
@@ -800,10 +761,8 @@ class CrawlEngine:
         # the rest SLEEP outside this generation's merge/window passes —
         # two filters over the cached checkpoint, no shuffle. Scheduling
         # cost becomes O(awake + new links), not O(accumulated frontier).
-        awake = asleep = None
-        if deferred is not None:
-            awake = deferred.filter(F.col("wake_gen") <= gen).select(_FCOLS)
-            asleep = deferred.filter(F.col("wake_gen") > gen)
+        awake = deferred.filter(F.col("wake_gen") <= gen).select(_FCOLS)
+        asleep = deferred.filter(F.col("wake_gen") > gen)
 
         # 1+2. NEW candidates only: dedupe + exact seen-probe fused into one
         # cogroup shuffle; residual anti-join against post-shard deltas.
@@ -842,17 +801,13 @@ class CrawlEngine:
         # merge (semi) and leave the sleep tier (anti) — both broadcast
         # joins on the generation-sized new-link keys, the frontier-scale
         # side never shuffles.
-        merged_in = allowed_new.select(_FCOLS)
-        if awake is not None:
-            merged_in = awake.unionByName(merged_in)
-        asleep_kept = asleep
-        if asleep is not None:
-            new_keys = allowed_new.select("url_hash")
-            woken_dups = (asleep.join(F.broadcast(new_keys), "url_hash",
-                                      "left_semi").select(_FCOLS))
-            asleep_kept = asleep.join(F.broadcast(new_keys), "url_hash",
-                                      "left_anti")
-            merged_in = merged_in.unionByName(woken_dups)
+        new_keys = allowed_new.select("url_hash")
+        woken_dups = (asleep.join(F.broadcast(new_keys), "url_hash",
+                                  "left_semi").select(_FCOLS))
+        asleep_kept = asleep.join(F.broadcast(new_keys), "url_hash",
+                                  "left_anti")
+        merged_in = (awake.unionByName(allowed_new.select(_FCOLS))
+                     .unionByName(woken_dups))
         merged = (merged_in.groupBy("url_hash")
                   .agg(F.min("url").alias("url"),
                        F.min("host").alias("host"),
@@ -872,15 +827,10 @@ class CrawlEngine:
         scheduled_pre = tagged.filter(F.col("_sched")).drop("_sched", "_delay")
         # unscheduled rows re-enter deferral with their wake generation;
         # still-sleeping rows carry straight through untouched
-        wake_expr = (F.lit(gen) + F.col("_delay").cast("long")
-                     if self.wake_tiering else F.lit(0).cast("long"))
-        deferred_next = (tagged.filter(~F.col("_sched"))
-                         .withColumn("wake_gen", wake_expr)
-                         .drop("_sched", "_delay")
-                         .select(*_FCOLS, "wake_gen"))
-        if asleep_kept is not None:
-            deferred_next = asleep_kept.select(*_FCOLS, "wake_gen") \
-                .unionByName(deferred_next)
+        deferred_next = asleep_kept.select(*_FCOLS, "wake_gen").unionByName(
+            tagged.filter(~F.col("_sched"))
+            .withColumn("wake_gen", F.lit(gen) + F.col("_delay").cast("long"))
+            .select(*_FCOLS, "wake_gen"))
         scheduled, n_scheduled = global_sequence(
             scheduled_pre, ["next_fetch_time", "url_hash", "url"], seq_start)
         cached.append(scheduled._ordered_cache)

@@ -10,8 +10,8 @@ background writers already saturate 32 physical cores, so the measured
 4->16 number bounds the HOST, not the dataflow; the 2->8 pair (slack at
 both levels) isolates the dataflow's own scaling, which is what transfers
 to a multi-executor cluster where each executor has host-local slack.
-Phase decomposition (AKF_CRAWL_DEBUG) backs this: the non-parse phases are
-seconds per generation at every level.
+Phase decomposition (``CrawlEngine.phase_log``) backs this: the non-parse
+phases are seconds per generation at every level.
 
 Two planes are measured:
 * parse plane — the extraction kernel over the synthetic corpus, fused
@@ -233,7 +233,7 @@ How to read the pairs — the single-host ceiling:
   local[16] that is ~32+ busy threads on 32 physical cores: the host, not
   the dataflow, is the limiting resource (per-core crawl throughput in the
   table drops between 8 and 16 cores while the non-parse phases stay at
-  seconds per generation — AKF_CRAWL_DEBUG decomposition).
+  seconds per generation — ``CrawlEngine.phase_log`` decomposition).
 * The 2->8 pair leaves host slack at BOTH levels, so it measures the
   dataflow's own scaling — the quantity that transfers to a multi-executor
   cluster, where each executor keeps host-local slack. This is the pair to

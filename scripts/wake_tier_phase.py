@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Wake-generation tiering: schedule-phase evidence (VERDICT r4 #7).
 
-Runs the crawl engine with wake_tiering ON and OFF (the control mode —
+Runs the crawl engine with the wake tier ON and OFF (the control mode —
 identical output, pre-tier frontier-proportional scheduling) at two corpus
 sizes and prints the per-generation `schedule+sequence` phase wall from
 ``CrawlEngine.phase_log`` as a markdown table for BENCH/BASELINE.md.
@@ -14,11 +14,34 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import contextlib
 import os
 import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+@contextlib.contextmanager
+def untiered():
+    """The tier-OFF control: every unscheduled row gets ``_delay`` 0, so
+    its wake generation is the current one and it re-enters the next
+    generation's merge/window passes."""
+    from pyspark.sql import functions as F
+
+    from akf_cdparser_spark.crawl import frontier
+
+    schedule = frontier._schedule_tagged
+
+    def zero_delay(*args, **kwargs):
+        tagged, cached = schedule(*args, **kwargs)
+        return tagged.withColumn("_delay", F.lit(0)), cached
+
+    frontier._schedule_tagged = zero_delay
+    try:
+        yield
+    finally:
+        frontier._schedule_tagged = schedule
 
 
 def run_mode(spark, n_docs: int, gens: int, tiering: bool,
@@ -27,10 +50,11 @@ def run_mode(spark, n_docs: int, gens: int, tiering: bool,
     from akf_cdparser_spark.crawl.frontier import CrawlEngine
     from akf_cdparser_spark.operators import extract as X
 
-    with tempfile.TemporaryDirectory() as state_dir:
+    with tempfile.TemporaryDirectory() as state_dir, \
+            (contextlib.nullcontext() if tiering else untiered()):
         engine = CrawlEngine(spark, state_dir, n_docs,
                              host_budget=budget or max(40, n_docs // 14),
-                             n_shards=16, n_salts=4, wake_tiering=tiering)
+                             n_shards=16, n_salts=4)
         engine.bootstrap(fixtures.seed_urls(max(50, n_docs // 10), n_docs),
                          fixtures.robots_rules(n_docs))
         docs = X.docs_dataframe(spark, n_docs)

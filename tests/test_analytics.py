@@ -302,6 +302,19 @@ def test_dup_clusters_star_matches_label_on_random_graphs(spark):
         assert {d: c for d, (c, _, _) in label.items()} == truth
 
 
+def test_dup_clusters_raises_when_not_converged(spark):
+    """A 60-node path needs ~60 label-propagation rounds: at the default
+    ``max_iter=25`` (and the star path capped at one round) both raise
+    instead of returning partially propagated clusters."""
+    pairs = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)],
+        "doc_a string, doc_b string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.dup_clusters(pairs)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup._dup_clusters_star(pairs, max_iter=1)
+
+
 def test_lse_zumstein_vector_spark_matches_twin(spark):
     """Spark zumsteinVector column vs the sequential twin that is itself
     Node-vm golden-locked (tests/test_lse_grouping.py) — on punctuation-

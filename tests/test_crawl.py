@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from akf_cdparser_spark import fixtures
-from akf_cdparser_spark.crawl import bloom
+from akf_cdparser_spark.crawl import bloom, frontier
 from akf_cdparser_spark.crawl.canonicalize import canonicalize_url, hash64_py
 from akf_cdparser_spark.crawl.frontier import CrawlEngine
 from akf_cdparser_spark.crawl.oracle import crawl_oracle
@@ -63,17 +63,28 @@ def test_throughput_counters(engine_result, oracle_result):
     assert totals["docs_parsed"] > 0
 
 
+@pytest.mark.parametrize("width", [3, 24])
 def test_order_invariant_across_parallelism(spark, tmp_path_factory,
-                                            engine_result):
+                                            engine_result, monkeypatch,
+                                            width):
     """Same fetch_log with a different salt count and shuffle layout —
-    ordering is defined by data, not by task scheduling."""
+    ordering is defined by data, not by task scheduling. run() sets the
+    shuffle width from ``_auto_width`` every generation (8 for every crawl
+    here), so the width is pinned there: 3 and 24 give 1 and 3 range
+    partitions in the global sequence."""
     _, log_a, seen_a = engine_result
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
-    try:
-        _, log_b, seen_b = _run_engine(
-            spark, tmp_path_factory.mktemp("crawl_b"), n_salts=7)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    used = []
+    generation = CrawlEngine._generation
+
+    def spy(self, *args):
+        used.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return generation(self, *args)
+
+    monkeypatch.setattr(CrawlEngine, "_auto_width", lambda self, last: width)
+    monkeypatch.setattr(CrawlEngine, "_generation", spy)
+    _, log_b, seen_b = _run_engine(
+        spark, tmp_path_factory.mktemp(f"crawl_w{width}"), n_salts=7)
+    assert used == [str(width)] * GENERATIONS
     assert log_a == log_b
     assert seen_a == seen_b
 
@@ -318,14 +329,21 @@ def test_checkpoint_storage_bounded(spark, tmp_path_factory):
 
 
 def test_wake_tiering_off_control_mode_exact(spark, tmp_path_factory,
-                                             oracle_result):
-    """wake_tiering=False (the measurement control for the tier's benefit:
-    every deferred row re-enters every generation's merge/window passes)
-    must produce the identical fetch_log — the tier is an optimization,
-    never a semantic switch."""
+                                             oracle_result, monkeypatch):
+    """The untiered control (the measurement control for the tier's
+    benefit: every deferred row re-enters every generation's merge/window
+    passes) must produce the identical fetch_log — the tier is an
+    optimization, never a semantic switch. Zeroing ``_delay`` gives
+    wake_gen = gen, so every deferred row is awake next generation."""
+    schedule = frontier._schedule_tagged
+
+    def untiered(*args, **kwargs):
+        tagged, cached = schedule(*args, **kwargs)
+        return tagged.withColumn("_delay", F.lit(0)), cached
+
+    monkeypatch.setattr(frontier, "_schedule_tagged", untiered)
     path = tmp_path_factory.mktemp("crawl_notier")
-    engine = CrawlEngine(spark, str(path), N_DOCS, host_budget=HOST_BUDGET,
-                         wake_tiering=False)
+    engine = CrawlEngine(spark, str(path), N_DOCS, host_budget=HOST_BUDGET)
     engine.bootstrap(SEEDS, ROBOTS)
     docs = X.docs_dataframe(spark, N_DOCS, partitions=8)
     engine.run(docs, GENERATIONS)
@@ -334,20 +352,20 @@ def test_wake_tiering_off_control_mode_exact(spark, tmp_path_factory,
     engine.close()
     assert [(r[0], r[1], r[2], r[3], r[4]) for r in log] == \
         oracle_result["fetch_log"]
+    snap = spark.read.parquet(str(path / "frontier" / f"gen={GENERATIONS}"))
+    assert snap.filter("validated").count() > 0
+    assert snap.filter(f"validated AND wake_gen <> {GENERATIONS}").count() == 0
     # phase log populated for the evidence scripts
     assert any(label == "schedule+sequence" for _g, label, _s in
                engine.phase_log)
 
 
-def test_wake_tier_active_and_legacy_snapshot_resume(spark, tmp_path_factory,
-                                                     oracle_result):
+def test_wake_tier_active_and_resume_exact(spark, tmp_path_factory,
+                                           oracle_result):
     """(a) The wake tier actually engages: with budget 3 and deep host
-    queues, some deferred rows sleep past the next generation. (b) A
-    round-3-format snapshot (no wake_gen column) resumes EXACTLY: legacy
-    wake reads as NULL -> 0 -> everything awake for one generation, then
-    re-tiers — final log and seen set still match the oracle."""
-    import shutil
-
+    queues, some deferred rows sleep past the next generation. (b) A fresh
+    engine resumes from that snapshot, sleeping rows and all, EXACTLY:
+    final log and seen set still match the oracle."""
     path = tmp_path_factory.mktemp("crawl_wake")
     engine = CrawlEngine(spark, str(path), N_DOCS, host_budget=HOST_BUDGET)
     engine.bootstrap(SEEDS, ROBOTS)
@@ -355,16 +373,9 @@ def test_wake_tier_active_and_legacy_snapshot_resume(spark, tmp_path_factory,
     engine.run(docs, 3)
     engine.close()
 
-    snap_dir = str(path / "frontier" / "gen=3")
-    snap = spark.read.parquet(snap_dir)
+    snap = spark.read.parquet(str(path / "frontier" / "gen=3"))
     assert snap.filter("validated AND wake_gen > 4").count() > 0, \
         "sleep tier never engaged — wake bound vacuous"
-
-    # strip wake_gen on disk: simulate a legacy snapshot
-    legacy_dir = str(path / "frontier_legacy")
-    snap.drop("wake_gen").write.mode("overwrite").parquet(legacy_dir)
-    shutil.rmtree(snap_dir)
-    shutil.move(legacy_dir, snap_dir)
 
     engine2 = CrawlEngine(spark, str(path), N_DOCS, host_budget=HOST_BUDGET)
     engine2.run(docs, GENERATIONS - 3)
@@ -628,13 +639,15 @@ def test_w3c_lastmod_unix_forms(spark):
     assert got == {c: py(c) for c in cases}
 
 
-def test_recrawl_epoch_exact(spark, tmp_path):
+def test_recrawl_epoch_exact(spark, tmp_path, monkeypatch):
     """Freshness recrawl closed end-to-end: epoch 1 crawls, a sitemap
     lastmod pass flags a third of the fetched URLs stale, epoch 2
     bootstraps with seeds=stale + seen=(epoch-1 seen minus stale) — and
     its fetch log + final seen set match the sequential oracle given the
     same initial seen, byte-for-byte. Within-epoch seen state stays
-    append-only; forgetting happens only at the boundary anti-join."""
+    append-only; forgetting happens only at the boundary anti-join. The
+    carried seen set is probed through gen-0 shards from the first
+    generation on, never anti-joined as a residual delta."""
     from akf_cdparser_spark.crawl.frontier import (CrawlEngine,
                                                    carry_seen_for_recrawl)
     from akf_cdparser_spark.crawl.sitemaps import freshness_recrawl
@@ -668,7 +681,16 @@ def test_recrawl_epoch_exact(spark, tmp_path):
                      host_budget=3, n_salts=2)
     e2.bootstrap(stale.select("url"), robots, seen=carry)
     e1.close()
+    entry = []
+    generation = e2._generation
+
+    def spy(gen, *args):
+        entry.append((gen, e2._shard_gen, sorted(e2._recent)))
+        return generation(gen, *args)
+
+    monkeypatch.setattr(e2, "_generation", spy)
     e2.run(docs, 3)
+    assert entry[0] == (1, 0, [])
     log2 = sorted((r.scheduled_seq, r.url_hash, r.url, r.doc_id, r.generation)
                   for r in e2.fetch_log().collect())
     seen2 = {r.url_hash: r.url for r in e2.seen().collect()}

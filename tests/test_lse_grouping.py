@@ -15,11 +15,27 @@ import os
 import pytest
 
 from akf_cdparser_spark.analytics.lse_grouping import streak_grouping
+from akf_cdparser_spark.kernel.dicts import _REFERENCE_DICTDIR
 
 _JS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "scripts", "lse_golden.js")
 
 node = shutil.which("node")
+
+# the reference checkout's lib/ — the sources the Node harnesses cut from
+_LIB = os.path.join(os.path.dirname(_REFERENCE_DICTDIR), "lib")
+
+
+def _needs_reference(*sources):
+    """Skip unless node and every reference source the harness reads exist."""
+    missing = [f for f in sources if not os.path.exists(os.path.join(_LIB, f))]
+    return pytest.mark.skipif(
+        node is None or bool(missing),
+        reason="node not available" if node is None
+        else f"reference {', '.join(missing)} not available")
+
+
+_needs_lsa = _needs_reference("lineSegmentAnalyzer.js")
 
 
 def _reference(cases):
@@ -54,7 +70,7 @@ ADVERSARIAL = [
 ]
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
+@_needs_lsa
 def test_port_matches_reference_adversarial():
     golden = _reference(ADVERSARIAL)
     for case, expect in zip(ADVERSARIAL, golden):
@@ -63,7 +79,7 @@ def test_port_matches_reference_adversarial():
         assert _norm(got) == _norm([tuple(r) for r in expect]), case
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
+@_needs_lsa
 def test_port_matches_reference_randomized():
     rng = random.Random(42)
     cases = []
@@ -111,7 +127,7 @@ def test_coupled_walk_differs_from_per_class():
         assert coupled != _norm(per), case
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
+@_needs_lsa
 def test_coupled_walk_matches_reference():
     """The coupled walk is golden-locked against the verbatim reference
     source on exactly the cases where cross-class coupling bites (the Node
@@ -124,7 +140,7 @@ def test_coupled_walk_matches_reference():
         assert _norm(got) == _norm([tuple(r) for r in expect]), case
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
+@_needs_lsa
 def test_coupled_walk_matches_reference_randomized_3class():
     rng = random.Random(99)
     cases = []
@@ -174,7 +190,7 @@ def test_insertion_order_is_load_bearing():
     assert out_a != out_b
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
+@_needs_lsa
 def test_insertion_order_matches_reference_pinned():
     """Both orders of the load-bearing case match the verbatim reference
     run with the SAME explicit holder insertion order."""
@@ -189,7 +205,7 @@ def test_insertion_order_matches_reference_pinned():
         assert _norm(got) == _norm([tuple(r) for r in expect])
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
+@_needs_lsa
 def test_insertion_order_matches_reference_randomized():
     """Randomized entry ORDERS (not just histograms): the port under
     insertion_rank must track the reference under the identical explicit
@@ -236,7 +252,7 @@ def _py_zumstein(line: str):
     return "".join(re.sub(r"^\s+|\s+$", "", r) for r in runs)
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
+@_needs_reference("lineSegmentAnalyzer.js", "regexLib.js", "utils.js")
 def test_zumstein_vector_matches_reference():
     """zumsteinVector mode (USE_ZUMSTEIN_VECTOR) locked against the
     verbatim createLocalDataset/sectorizeLineElements run in a Node vm:

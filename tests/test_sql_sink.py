@@ -4,6 +4,7 @@ the kernel's records for the REAL golden document and synthetic variants,
 including the quote-escape and missing-field (NULL) paths."""
 
 import json
+import os
 import shutil
 import subprocess
 
@@ -11,15 +12,21 @@ import pytest
 
 from akf_cdparser_spark import fixtures
 from akf_cdparser_spark.kernel import parse_document
+from akf_cdparser_spark.kernel.dicts import _REFERENCE_DICTDIR
 from akf_cdparser_spark.operators import extract as X
 from akf_cdparser_spark.operators import sql_sink
 
 node = shutil.which("node")
 
-_GOLDEN = "/root/reference/test/fixtures/html/2005/0003.html.utf8.html"
+_CONVERTER = os.path.join(os.path.dirname(_REFERENCE_DICTDIR), "lib",
+                          "converter.js")
 
-_JS = """
-const AkfConverter = require('/root/reference/lib/converter.js');
+pytestmark = pytest.mark.skipif(
+    node is None or not os.path.exists(_CONVERTER),
+    reason="node or the reference converter not available")
+
+_JS = f"""
+const AkfConverter = require({json.dumps(_CONVERTER)});
 const profils = JSON.parse(require('fs').readFileSync(0, 'utf8'));
 const conv = new AkfConverter();
 process.stdout.write(JSON.stringify(profils.map(p => conv.json2sql(p))));
@@ -37,7 +44,6 @@ def _clean(rec: dict) -> dict:
     return {k: v for k, v in rec.items() if not k.startswith("_")}
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
 def test_json2sql_matches_reference_on_golden_and_corpus(spark):
     n = 12
     docs = X.docs_dataframe(spark, n)
@@ -56,7 +62,6 @@ def test_json2sql_matches_reference_on_golden_and_corpus(spark):
         assert got[doc_id] == exp, doc_id
 
 
-@pytest.mark.skipif(node is None, reason="node not available")
 def test_json2sql_quote_and_null_quirks():
     profils = [
         # first quote escaped, second left alone (JS String.replace quirk)

@@ -3,6 +3,7 @@ reference fixture validates true; deleting the wkn flips it to false —
 mirrors test/parser.test.js:19-21."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,6 +24,8 @@ def _records_df(spark, rec_variants):
 
 @pytest.fixture(scope="module")
 def golden_record():
+    if not os.path.exists(FIXTURE):
+        pytest.skip("reference fixture not available")
     with open(FIXTURE, encoding="utf-8") as fh:
         rec, _lineage, _counts = parse_document(fh.read())
     return rec
