@@ -256,19 +256,37 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return docs.select("doc_id", "text").mapInArrow(run, out_schema)
 
 
+def hamming_band_keys(col: str, max_hamming: int,
+                      prefix: "str | F.Column" = "") -> "F.Column":
+    """``array<string>`` bucket keys of a 64-bit hash column for a
+    Hamming-radius band join: ``n = max_hamming + 1`` bands partition the
+    64 bits, band j covering bits ``[64j//n, 64(j+1)//n)``. Pigeonhole:
+    two hashes within ``max_hamming`` bits differ in at most
+    ``max_hamming`` bands, so they share at least one key and the equi-join
+    on the keys loses no qualifying pair. At radius 3 this is four 16-bit
+    bands. Arithmetic shift + mask is sign-safe; a 64-bit band (radius 0)
+    is the hash itself. ``prefix`` scopes the keys (e.g. by media kind)."""
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(f"max_hamming={max_hamming} is outside 0..63")
+    n = max_hamming + 1
+    pre = F.lit(prefix) if isinstance(prefix, str) else prefix
+    keys = []
+    for j in range(n):
+        lo, hi = 64 * j // n, 64 * (j + 1) // n
+        band = F.col(col) if hi - lo == 64 else \
+            F.shiftright(col, lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1))
+        keys.append(F.concat(pre, F.lit(f"b{j}:"), band.cast("string")))
+    return F.array(*keys)
+
+
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by simhash Hamming distance, candidate-bucketed on
-    four 16-bit bands (pigeonhole: a pair within distance d<=3 agrees on
-    at least one of the 4 bands). Arithmetic shift + mask is sign-safe."""
+    ``max_hamming + 1`` bands (``hamming_band_keys``: complete for any
+    radius in 0..63), verified by exact ``bit_count``."""
     sh = simhash(docs)
-    band_cols = [
-        F.concat(F.lit(f"b{j}:"),
-                 (F.shiftright("simhash", 16 * j)
-                  .bitwiseAND(F.lit(0xFFFF))).cast("string"))
-        for j in range(4)]
     halves = sh.select(
         "doc_id", "simhash",
-        F.explode(F.array(*band_cols)).alias("bucket"))
+        F.explode(hamming_band_keys("simhash", max_hamming)).alias("bucket"))
     cand = (halves.alias("a").join(halves.alias("b"), "bucket")
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
             .select(F.col("a.doc_id").alias("doc_a"),
@@ -283,88 +301,7 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
             .select("doc_a", "doc_b", "hamming"))
 
 
-def _dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    O(log^2 n)-round path for ADVERSARIALLY DEEP graphs, where plain
-    min-label propagation needs O(diameter) rounds.
-
-    Per round over the current edge set E (symmetrized to adjacency):
-    * large-star: every node u links each STRICTLY LARGER neighbor v to
-      m(u) = min(N(u) + {u});
-    * small-star: every node u links each neighbor v <= u to m(u).
-    Self-loops drop, edges dedupe; converged when the edge multiset's
-    (count, hash-sum) checksum is stable — one 1-row driver read per
-    round, never the edges themselves. At the fixpoint every node points
-    straight at its component minimum (a star), which IS the label."""
-    sym = (pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-           .unionByName(pairs.select(F.col("doc_b").alias("u"),
-                                     F.col("doc_a").alias("v"))))
-    nodes = sym.select(F.col("u").alias("doc_id")).distinct().localCheckpoint()
-    edges = sym.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        adj = e.unionByName(e.select(F.col("v").alias("u"),
-                                     F.col("u").alias("v")))
-        mins = (adj.groupBy("u")
-                .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-        side = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        out = (adj.filter(side).join(mins, "u")
-               .select(F.col("v").alias("u"), F.col("m").alias("v")))
-        if not large:
-            # small-star also links u ITSELF to m (Kiveris Alg. 2 emits
-            # (v, m) for v in N ∪ {u}); dropping it disconnects u
-            out = out.unionByName(mins.select("u", F.col("m").alias("v")))
-        return out.filter(F.col("u") != F.col("v")).distinct()
-
-    def checksum(e: DataFrame) -> tuple:
-        # decimal(38,0) sums: exact and overflow-free under ANSI mode.
-        # Two INDEPENDENT hash-sums (different seed columns) — a collision
-        # must now hold simultaneously in both order-insensitive sums,
-        # and even then the exact diff below catches it (ADVICE r4: the
-        # single hash-sum alone made early termination merely
-        # overwhelmingly likely, not exact).
-        row = e.agg(F.count("*").alias("n"),
-                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
-                    .alias("h"),
-                    F.sum(F.xxhash64(F.lit(0x5eed), "u", "v")
-                          .cast("decimal(38,0)")).alias("h2")).first()
-        return (row["n"], row["h"], row["h2"])
-
-    prev_edges = edges
-    prev = checksum(edges)
-    for _ in range(max_iter):
-        edges = star(star(edges, large=True), large=False).localCheckpoint()
-        cur = checksum(edges)
-        if cur == prev:
-            # checksum match is a cheap screen; confirm the fixpoint with
-            # ONE exact set comparison (both sides are distinct by
-            # construction, so symmetric-difference emptiness == equality).
-            # Runs once per converged call, not once per round.
-            if (edges.exceptAll(prev_edges).unionByName(
-                    prev_edges.exceptAll(edges)).isEmpty()):
-                break
-        prev = cur
-        prev_edges = edges
-    else:
-        raise RuntimeError(
-            f"dup_clusters (star) did not converge in {max_iter} rounds")
-    # star fixpoint: each non-minimum node has exactly its component min as
-    # neighbor; minima label themselves
-    point = edges.groupBy("u").agg(F.min("v").alias("label"))
-    labels = (nodes.join(point, nodes.doc_id == point.u, "left")
-              .select("doc_id",
-                      F.coalesce(F.least("label", "doc_id"), "doc_id")
-                      .alias("label")))
-    sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    return (labels.join(sizes, "label")
-            .select("doc_id", F.col("label").alias("cluster_id"),
-                    "cluster_size",
-                    (F.col("doc_id") == F.col("label")).alias("is_canonical")))
-
-
-def dup_clusters(pairs: DataFrame, max_iter: int = 25,
-                 algorithm: str = "label") -> DataFrame:
+def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Resolve near-dup PAIRS into duplicate CLUSTERS: connected components
     with ``cluster_id`` = the lexicographic-min doc_id of the component,
     plus ``cluster_size`` and the ``is_canonical`` flag (the member every
@@ -378,45 +315,40 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25,
     ``max_iter`` as a hard stop that raises rather than returning
     unconverged labels). Each round is one equi-join + groupBy on
     (node, label) pairs — never materializes components on the driver; the
-    per-round ``localCheckpoint`` truncates the iterative plan.
-
-    ``algorithm="star"`` swaps the body for the large-star/small-star
-    rounds of Kiveris et al. (``_dup_clusters_star``): O(log^2 n) rounds
-    instead of O(diameter) — the scale path for adversarially deep graphs.
-    Both return identical results (property-tested against each other on
-    random graphs in tests/test_analytics.py).
+    per-round ``localCheckpoint`` truncates the iterative plan. A graph
+    deeper than ``max_iter`` raises; pass a larger ``max_iter`` for it
+    (union-find-tested on random graphs and a 60-node path in
+    tests/test_analytics.py).
     """
-    if algorithm == "star":
-        return _dup_clusters_star(pairs, max_iter=max(max_iter, 50))
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     edges = (pairs.select(F.col("doc_a").alias("src"),
                           F.col("doc_b").alias("dst"))
              .unionByName(pairs.select(F.col("doc_b").alias("src"),
                                        F.col("doc_a").alias("dst")))
              .distinct().persist())
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("label", F.col("doc_id"))).localCheckpoint()
-    for _ in range(max_iter):
-        neigh = (edges.join(labels, edges.src == labels.doc_id)
-                 .groupBy(F.col("dst").alias("doc_id"))
-                 .agg(F.min("label").alias("nl")))
-        new_labels = (labels.join(neigh, "doc_id", "left")
-                      .select("doc_id",
-                              F.least(F.col("label"),
-                                      F.coalesce("nl", "label"))
-                              .alias("label"))).localCheckpoint()
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "doc_id")
-                   .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if not changed:
-            break
-    else:
+    try:
+        labels = (edges.select(F.col("src").alias("doc_id")).distinct()
+                  .withColumn("label", F.col("doc_id"))).localCheckpoint()
+        for _ in range(max_iter):
+            neigh = (edges.join(labels, edges.src == labels.doc_id)
+                     .groupBy(F.col("dst").alias("doc_id"))
+                     .agg(F.min("label").alias("nl")))
+            new_labels = (labels.join(neigh, "doc_id", "left")
+                          .select("doc_id",
+                                  F.least(F.col("label"),
+                                          F.coalesce("nl", "label"))
+                                  .alias("label"))).localCheckpoint()
+            changed = (new_labels.alias("n")
+                       .join(labels.alias("o"), "doc_id")
+                       .filter(F.col("n.label") != F.col("o.label"))
+                       .count())
+            labels = new_labels
+            if not changed:
+                break
+        else:
+            raise RuntimeError(
+                f"dup_clusters did not converge in {max_iter} rounds")
+    finally:
         edges.unpersist()
-        raise RuntimeError(
-            f"dup_clusters did not converge in {max_iter} rounds")
-    edges.unpersist()
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return (labels.join(sizes, "label")
             .select("doc_id", F.col("label").alias("cluster_id"),

@@ -666,34 +666,25 @@ def media_dhash(media: DataFrame) -> DataFrame:
 
 def media_near_dups(media: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate media pairs by dHash Hamming distance,
-    candidate-bucketed on four 16-bit bands — the simhash_near_dups
-    banding verbatim (pigeonhole: distance <= 3 leaves at least one of
-    4 bands intact, so the band equi-join loses NOTHING vs all-pairs;
-    completeness asserted against the all-pairs twin in tests). Returns
-    (ref_a, ref_b, hamming), ref_a < ref_b.
+    candidate-bucketed on ``max_hamming + 1`` bands — the
+    simhash_near_dups banding (``dedup.hamming_band_keys``; pigeonhole:
+    distance <= max_hamming leaves at least one band intact, so the band
+    equi-join loses NOTHING vs all-pairs; completeness asserted against
+    the all-pairs twin in tests). Returns (ref_a, ref_b, kind, hamming),
+    ref_a < ref_b.
 
-    100-TB shape: decode+hash in the scan stage, band join on 16-bit
-    keys (bounded fanout per bucket for natural images; a degenerate
+    100-TB shape: decode+hash in the scan stage, band join on
+    ``64 // (max_hamming + 1)``-bit keys (bounded fanout per bucket for natural images; a degenerate
     bucket — e.g. a constant-color internet-wide banner — is exact-dup
     territory and should be removed by media_dedup first)."""
-    if max_hamming >= 4:
-        # 4 flipped bits can hit all 4 bands — the equi-join would
-        # silently drop qualifying pairs (ADVICE r6). The 4x16-bit
-        # banding is pigeonhole-complete only for max_hamming <= 3.
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the 4-band completeness "
-            "bound (<= 3); raise the band count for larger radii")
-    dh = media_dhash(media)
+    from .dedup import hamming_band_keys
+
     # the bucket key includes KIND: hash spaces of different modalities
     # are incomparable, so cross-kind candidates are never generated
-    band_cols = [
-        F.concat(F.col("kind"), F.lit(f":b{j}:"),
-                 (F.shiftright("dhash", 16 * j)
-                  .bitwiseAND(F.lit(0xFFFF))).cast("string"))
-        for j in range(4)]
-    bands = dh.select(
-        "media_ref", "kind", "dhash",
-        F.explode(F.array(*band_cols)).alias("bucket"))
+    keys = hamming_band_keys("dhash", max_hamming,
+                             prefix=F.concat(F.col("kind"), F.lit(":")))
+    bands = media_dhash(media).select(
+        "media_ref", "kind", "dhash", F.explode(keys).alias("bucket"))
     cand = (bands.alias("a").join(bands.alias("b"), "bucket")
             .filter(F.col("a.media_ref") < F.col("b.media_ref"))
             .select(F.col("a.media_ref").alias("ref_a"),

@@ -29,6 +29,23 @@ def _norm(a):
         F.lit(0.0), lambda acc, v: acc + v))
 
 
+def _cosine(a, b, round_to: int):
+    """Exact cosine of two float arrays, rounded half-up to ``round_to``
+    dp: the score every float top-k and near-dup operator here reports."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), round_to)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The ranking contract every top-k operator here shares: per
+    ``query_id``, rows in (cosine desc, vec_id asc) order, the first ``k``
+    as ``(query_id, vec_id, cosine, rank)``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("vec_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "vec_id", "cosine", "rank"))
+
+
 def cosine_topk_bruteforce(embeddings: DataFrame, query_ids: list[int],
                            k: int = 5, round_to: int = 4) -> DataFrame:
     """For each query vector (selected by vec_id), the k nearest other
@@ -40,15 +57,8 @@ def cosine_topk_bruteforce(embeddings: DataFrame, query_ids: list[int],
                        F.col("embedding").alias("q_emb")))
     scored = (embeddings.join(F.broadcast(queries),
                               F.col("vec_id") != F.col("query_id"))
-              .withColumn("cosine",
-                          F.round(_dot("q_emb", "embedding")
-                                  / (_norm("q_emb") * _norm("embedding")),
-                                  round_to)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
+              .withColumn("cosine", _cosine("q_emb", "embedding", round_to)))
+    return _rank_topk(scored, k)
 
 
 def _hyperplane(dim: int, plane_id: int) -> list[float]:
@@ -65,43 +75,13 @@ def _hyperplane(dim: int, plane_id: int) -> list[float]:
     return comps
 
 
-def lsh_bucket_keys(embeddings: DataFrame, dim: int, n_planes: int = 8) -> DataFrame:
-    """Random-hyperplane sign signature -> one bucket key per vector."""
-    sig = None
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(c) for c in _hyperplane(dim, p)])
-        bit = F.when(_dot(F.col("embedding"), plane) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        sig = bit if sig is None else F.concat(sig, bit)
-    return embeddings.select("vec_id", "embedding", sig.alias("bucket"))
-
-
-def cosine_topk_lsh(embeddings: DataFrame, query_ids: list[int], dim: int,
-                    k: int = 5, n_planes: int = 8, round_to: int = 4) -> DataFrame:
-    """ANN via LSH: score only corpus vectors in the query's bucket. The
-    bucket join is an equi-join (shuffle on an 8-char key) instead of a
-    cross product; recall is traded for a ~2^planes candidate reduction."""
-    keyed = lsh_bucket_keys(embeddings, dim, n_planes)
-    queries = (keyed.filter(F.col("vec_id").isin(query_ids))
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb"),
-                       F.col("bucket")))
-    scored = (keyed.join(F.broadcast(queries), "bucket")
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("cosine",
-                          F.round(_dot("q_emb", "embedding")
-                                  / (_norm("q_emb") * _norm("embedding")),
-                                  round_to)))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
-
-
 def lsh_banded_bucket_keys(embeddings: DataFrame, dim: int, n_bands: int = 4,
                            planes_per_band: int = 4) -> DataFrame:
     """OR-AND LSH: ``n_bands`` independent sign signatures per vector, one
     row per (vec, band). Candidates = any shared (band, bucket) — the same
-    banding trick as MinHash LSH, tunable recall at equi-join cost."""
+    banding trick as MinHash LSH, tunable recall at equi-join cost. One
+    band is single-table LSH: the sign signature over planes
+    ``0..planes_per_band-1``."""
     bands = []
     for b in range(n_bands):
         sig = None
@@ -134,13 +114,8 @@ def cosine_topk_lsh_banded(embeddings: DataFrame, query_ids: list[int],
              .filter(F.col("vec_id") != F.col("query_id"))
              .select("query_id", "q_emb", "vec_id", "embedding")
              .dropDuplicates(["query_id", "vec_id"]))
-    scored = cands.withColumn(
-        "cosine", F.round(_dot("q_emb", "embedding")
-                          / (_norm("q_emb") * _norm("embedding")), round_to))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
+    return _rank_topk(
+        cands.withColumn("cosine", _cosine("q_emb", "embedding", round_to)), k)
 
 
 def _recall_vs(brute: DataFrame, approx: DataFrame) -> DataFrame:
@@ -203,7 +178,7 @@ def ivf_centroid_row(embeddings: DataFrame, n_lists: int = IVF_N_LISTS) -> DataF
     Lloyd pass LOWERED recall@5 (0.76 -> 0.68 at 16/2/4) — the classic
     behavior for data with no cluster structure. On a clustered production
     corpus, refine offline and feed the refined centroids via
-    ``ivf_topk(..., centroid_row=...)``.
+    ``ivf_inverted_lists(..., centroid_row=...)``.
     """
     cents = (embeddings
              .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
@@ -294,13 +269,8 @@ def cosine_topk_ivf(embeddings: DataFrame, query_ids: list[int],
              .filter(F.col("vec_id") != F.col("query_id"))
              .select("query_id", "q_emb", "vec_id", "embedding")
              .dropDuplicates(["query_id", "vec_id"]))
-    scored = cands.withColumn(
-        "cosine", F.round(_dot("q_emb", "embedding")
-                          / (_norm("q_emb") * _norm("embedding")), round_to))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
+    return _rank_topk(
+        cands.withColumn("cosine", _cosine("q_emb", "embedding", round_to)), k)
 
 
 def ivf_recall_vs_bruteforce(embeddings: DataFrame, query_ids: list[int],
@@ -357,13 +327,8 @@ def cosine_topk_ivf_index(spark, path: str, queries: DataFrame,
              .filter(F.col("vec_id") != F.col("query_id"))
              .select("query_id", "q_emb", "vec_id", "embedding")
              .dropDuplicates(["query_id", "vec_id"]))
-    scored = cands.withColumn(
-        "cosine", F.round(_dot("q_emb", "embedding")
-                          / (_norm("q_emb") * _norm("embedding")), round_to))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
+    return _rank_topk(
+        cands.withColumn("cosine", _cosine("q_emb", "embedding", round_to)), k)
 
 
 def embedding_near_dups(embeddings: DataFrame, *, dim: int,
@@ -374,17 +339,15 @@ def embedding_near_dups(embeddings: DataFrame, *, dim: int,
     REQUIRED plan-time constant (no driver action inside the operator; a
     silent default would truncate the hyperplanes for wider embeddings and
     lose recall — pass the real dimension from config/schema)."""
-    keyed = lsh_bucket_keys(embeddings, dim, n_planes)
-    pairs = (keyed.alias("a").join(keyed.alias("b"), "bucket")
+    keyed = lsh_banded_bucket_keys(embeddings, dim, 1, n_planes)
+    pairs = (keyed.alias("a").join(keyed.alias("b"), ["band", "bucket"])
              .filter(F.col("a.vec_id") < F.col("b.vec_id"))
              .select(F.col("a.vec_id").alias("vec_a"),
                      F.col("b.vec_id").alias("vec_b"),
                      F.col("a.embedding").alias("ea"),
                      F.col("b.embedding").alias("eb"))
              .distinct())
-    return (pairs.withColumn(
-                "cosine",
-                F.round(_dot("ea", "eb") / (_norm("ea") * _norm("eb")), round_to))
+    return (pairs.withColumn("cosine", _cosine("ea", "eb", round_to))
             .filter(F.col("cosine") >= threshold)
             .select("vec_a", "vec_b", "cosine"))
 
@@ -404,22 +367,23 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     The scale is bound to a projected column with multiple consumers
     (the zero-branch test + the per-element lambda) so it is computed
     once per vector, not once per element — the lambda-CSE rule."""
-    base = (embeddings
-            .select("vec_id",
-                    F.transform("embedding",
-                                lambda x: x.cast("double")).alias("_v"))
+    return _scaled(embeddings).select(
+        "vec_id",
+        F.round("_s", 6).alias("scale"),
+        F.array_join(F.transform(_quant_code_expr(),
+                                 lambda x: x.cast("string")), ",")
+        .alias("q_codes"))
+
+
+def _scaled(df: DataFrame) -> DataFrame:
+    """``(vec_id, _v, _s)``: the vector as doubles and its max-abs scale,
+    the two bound inputs of ``_quant_code_expr``."""
+    return (df.select("vec_id",
+                      F.transform("embedding",
+                                  lambda x: x.cast("double")).alias("_v"))
             .select("vec_id", "_v",
                     F.array_max(F.transform(
                         "_v", lambda x: F.abs(x))).alias("_s")))
-    q = F.when(F.col("_s") == 0.0,
-               F.transform("_v", lambda x: F.lit(0))).otherwise(
-        F.transform("_v",
-                    lambda x: F.floor(x * 127.0 / F.col("_s")).cast("int")))
-    return base.select(
-        "vec_id",
-        F.round("_s", 6).alias("scale"),
-        F.array_join(F.transform(q, lambda x: x.cast("string")), ",")
-        .alias("q_codes"))
 
 
 def _quant_code_expr():
@@ -439,14 +403,7 @@ def _quantize_arrays(embeddings: DataFrame) -> DataFrame:
     operator plane of ``quantize_embeddings``, which string-renders for
     the oracle): (vec_id, q array<int>). Scale is irrelevant downstream —
     symmetric per-vector scaling cancels out of cosine."""
-    base = (embeddings
-            .select("vec_id",
-                    F.transform("embedding",
-                                lambda x: x.cast("double")).alias("_v"))
-            .select("vec_id", "_v",
-                    F.array_max(F.transform(
-                        "_v", lambda x: F.abs(x))).alias("_s")))
-    return base.select("vec_id", _quant_code_expr().alias("q"))
+    return _scaled(embeddings).select("vec_id", _quant_code_expr().alias("q"))
 
 
 def cosine_topk_int8(embeddings: DataFrame, query_ids: list[int],
@@ -473,11 +430,7 @@ def cosine_topk_int8(embeddings: DataFrame, query_ids: list[int],
                           F.round(F.col("_d")
                                   / (F.sqrt("_qn2") * F.sqrt("_n2")),
                                   round_to)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
+    return _rank_topk(scored, k)
 
 
 def _idot(a, b):
@@ -511,13 +464,8 @@ def cosine_topk_ivf_int8(embeddings: DataFrame, query_ids: list[int],
     cents = ivf_centroid_row(embeddings, n_lists).localCheckpoint()  # 2 consumers
 
     def with_codes_and_lists(df, m, out_key):
-        base = (df.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("_v"))
-            .select("vec_id", "_v",
-                    F.array_max(F.transform(
-                        "_v", lambda x: F.abs(x))).alias("_s"))
-            .select("vec_id", "_v", "_s", _norm(F.col("_v")).alias("_nrm")))
+        base = _scaled(df).select("vec_id", "_v", "_s",
+                                  _norm(F.col("_v")).alias("_nrm"))
         return (base.join(F.broadcast(cents))
                 .select("vec_id", _quant_code_expr().alias(out_key),
                         F.slice(_list_scores(F.col("_v"), F.col("cents"),
@@ -539,11 +487,7 @@ def cosine_topk_ivf_int8(embeddings: DataFrame, query_ids: list[int],
         F.round(_idot("q_q", "q")
                 / (F.sqrt(_idot("q_q", "q_q")) * F.sqrt(_idot("q", "q"))),
                 round_to).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
+    return _rank_topk(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -578,6 +522,41 @@ def _d2(a, b):
     return F.round(F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0), lambda acc, v: acc + v), 6)
+
+
+def _subspace_d2(vec: str, m_sub: int, d: int):
+    """(m_sub x ks) squared-L2 distances from the m-th ``d``-wide
+    sub-slice of the unit vector column ``vec`` to subspace m's centroids
+    in the bound ``books`` codebook column: a vector's PQ code inputs
+    (``pq_encode``) and a query's ADC table (``dtab``)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(m_sub - 1)),
+        lambda m: F.transform(
+            F.element_at("books", (m + 1).cast("int")),
+            lambda c: _d2(F.slice(F.col(vec), m * d + 1, d), c)))
+
+
+def _adc_topk(cands: DataFrame, k: int, rerank_r: int,
+              round_to: int) -> DataFrame:
+    """ADC shortlist + exact rerank over ``(query_id, q_u, dtab, vec_id,
+    u, codes)`` candidate rows: rank by ``sum_m dtab[m][code_m]`` (a
+    left-to-right fold over (code_m, dtab row m) pairs — a fixed summation
+    order, so the double sum is bit-reproducible everywhere, rounded to
+    6 dp), keep each query's ``rerank_r`` nearest (vec_id breaks ties),
+    then rank those by exact cosine of the unit vectors."""
+    adist = F.aggregate(
+        F.zip_with("codes", "dtab",
+                   lambda c, row: F.element_at(row, (c + 1).cast("int"))),
+        F.lit(0.0), lambda acc, v: acc + v)
+    ws = Window.partitionBy("query_id").orderBy(
+        F.asc("adist"), F.asc("vec_id"))
+    short = (cands.select("query_id", "q_u", "vec_id", "u",
+                          F.round(adist, 6).alias("adist"))
+             .withColumn("_r", F.row_number().over(ws))
+             .filter(F.col("_r") <= rerank_r))
+    return _rank_topk(short.select(
+        "query_id", "vec_id",
+        F.round(_dot("q_u", "u"), round_to).alias("cosine")), k)
 
 
 def pq_codebook_row(embeddings: DataFrame, dim: int, m_sub: int = PQ_M,
@@ -626,7 +605,6 @@ def pq_encode(embeddings: DataFrame, dim: int, m_sub: int = PQ_M,
 
     Plan shape: one-row codebook broadcast + pure higher-order-function
     projections — the corpus NEVER shuffles."""
-    d = dim // m_sub
     books = codebook_row if codebook_row is not None \
         else pq_codebook_row(embeddings, dim, m_sub, ks)
     base = (embeddings
@@ -635,16 +613,12 @@ def pq_encode(embeddings: DataFrame, dim: int, m_sub: int = PQ_M,
     # bind the per-subspace distance rows to a projected column FIRST —
     # array_min + array_position both consume each row, and codegen CSE
     # does not reach into lambda bodies (the lambda-CSE rule)
-    dists = F.transform(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        lambda m: F.transform(
-            F.element_at("books", (m + 1).cast("int")),
-            lambda c: _d2(F.slice(F.col("u"), m * d + 1, d), c)))
     codes = F.transform(
         F.col("_dists"),
         lambda row: (F.array_position(row, F.array_min(row)) - 1)
         .cast("int"))
-    return (base.select("vec_id", "u", dists.alias("_dists"))
+    return (base.select("vec_id", "u",
+                        _subspace_d2("u", m_sub, dim // m_sub).alias("_dists"))
             .select("vec_id", "u", codes.alias("codes")))
 
 
@@ -673,39 +647,15 @@ def pq_topk_adc(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     books = codebook_row if codebook_row is not None \
         else pq_codebook_row(embeddings, dim, m_sub, ks).localCheckpoint()
     enc = pq_encode(embeddings, dim, m_sub, ks, codebook_row=books)
-    d = dim // m_sub
-    dtab = F.transform(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        lambda m: F.transform(
-            F.element_at("books", (m + 1).cast("int")),
-            lambda c: _d2(F.slice(F.col("q_u"), m * d + 1, d), c)))
     queries = (embeddings.filter(F.col("vec_id").isin(query_ids))
                .select(F.col("vec_id").alias("query_id"),
                        _unit(F.col("embedding")).alias("q_u"))
                .join(F.broadcast(books))
-               .select("query_id", "q_u", dtab.alias("dtab")))
-    # ADC: left-to-right fold over (code_m, dtab row m) pairs — a fixed
-    # summation order, so the double sum is bit-reproducible everywhere
-    adist = F.aggregate(
-        F.zip_with("codes", "dtab",
-                   lambda c, row: F.element_at(row, (c + 1).cast("int"))),
-        F.lit(0.0), lambda acc, v: acc + v)
-    cands = (enc.join(F.broadcast(queries),
-                      F.col("vec_id") != F.col("query_id"))
-             .select("query_id", "q_u", "vec_id", "u",
-                     F.round(adist, 6).alias("adist")))
-    ws = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("vec_id"))
-    short = (cands.withColumn("_r", F.row_number().over(ws))
-             .filter(F.col("_r") <= rerank_r))
-    scored = short.select(
-        "query_id", "vec_id",
-        F.round(_dot("q_u", "u"), round_to).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
+               .select("query_id", "q_u",
+                       _subspace_d2("q_u", m_sub, dim // m_sub).alias("dtab")))
+    return _adc_topk(enc.join(F.broadcast(queries),
+                              F.col("vec_id") != F.col("query_id")),
+                     k, rerank_r, round_to)
 
 
 def pq_recall_vs_bruteforce(embeddings: DataFrame, query_ids: list[int],
@@ -773,7 +723,6 @@ def cosine_topk_ivfpq(embeddings: DataFrame, query_ids: list[int],
     enc = pq_encode(embeddings, dim, m_sub, ks, codebook_row=books)
     inv_enc = inv.select("list_id", "vec_id").join(enc, "vec_id")
 
-    d = dim // m_sub
     q1 = (embeddings.filter(F.col("vec_id").isin(query_ids))
           .withColumn("_nrm", _norm(F.col("embedding")))
           .join(F.broadcast(cents))
@@ -785,35 +734,13 @@ def cosine_topk_ivfpq(embeddings: DataFrame, query_ids: list[int],
                   _unit(F.col("embedding")).alias("q_u"),
                   F.col("books").alias("books"),
                   F.col("_probes.list_id").alias("_plists")))
-    dtab = F.transform(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        lambda m: F.transform(
-            F.element_at("books", (m + 1).cast("int")),
-            lambda c: _d2(F.slice(F.col("q_u"), m * d + 1, d), c)))
-    queries = q1.select("query_id", "q_u", dtab.alias("dtab"),
+    queries = q1.select("query_id", "q_u",
+                        _subspace_d2("q_u", m_sub, dim // m_sub).alias("dtab"),
                         F.explode("_plists").alias("list_id"))
-
-    adist = F.aggregate(
-        F.zip_with("codes", "dtab",
-                   lambda c, row: F.element_at(row, (c + 1).cast("int"))),
-        F.lit(0.0), lambda acc, v: acc + v)
-    cands = (inv_enc.join(F.broadcast(queries), "list_id")
-             .filter(F.col("vec_id") != F.col("query_id"))
-             .dropDuplicates(["query_id", "vec_id"])
-             .select("query_id", "q_u", "vec_id", "u",
-                     F.round(adist, 6).alias("adist")))
-    ws = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("vec_id"))
-    short = (cands.withColumn("_r", F.row_number().over(ws))
-             .filter(F.col("_r") <= rerank_r))
-    scored = short.select(
-        "query_id", "vec_id",
-        F.round(_dot("q_u", "u"), round_to).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine", "rank"))
+    return _adc_topk(inv_enc.join(F.broadcast(queries), "list_id")
+                     .filter(F.col("vec_id") != F.col("query_id"))
+                     .dropDuplicates(["query_id", "vec_id"]),
+                     k, rerank_r, round_to)
 
 
 def ivfpq_recall_vs_bruteforce(embeddings: DataFrame,

@@ -11,6 +11,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEMORY`` is unset: a quarter of
+    physical memory, at least 2g and at most 48g, so a session fits on a
+    small host and a large one is not capped below what it can hold."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = min(48 << 10, max(2 << 10, total // 4 >> 20))
+    return f"{mb}m"
+
+
 def get_spark(
     app_name: str = "akf_cdparser_spark",
     master: str | None = None,
@@ -45,7 +54,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY")
+                or _default_driver_memory())
         # FAIR root scheduling: the crawl engine pipelines background state
         # writes against the next generation's compute. The mode alone only
         # enables fair sharing BETWEEN pools — the engine's writer threads

@@ -67,6 +67,47 @@ def test_simhash_near_dups(planted):
     assert all(not ({"d00", "d04"} <= set(p)) for p in pairs)
 
 
+def test_simhash_near_dups_complete_above_radius_3(spark):
+    """Above radius 3 the banded join still returns EVERY pair the
+    all-pairs Hamming filter over the same simhashes does: the band
+    layout grows with the radius (four fixed 16-bit bands returned 55 of
+    the 71 pairs at radius 6 on sf0.001)."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    sh = sorted((r.doc_id, r.simhash)
+                for r in dedup.simhash(docs).collect())
+    for radius in (5, 6):
+        truth = {(a, b, bin((x ^ y) & ((1 << 64) - 1)).count("1"))
+                 for i, (a, x) in enumerate(sh) for b, y in sh[i + 1:]
+                 if bin((x ^ y) & ((1 << 64) - 1)).count("1") <= radius}
+        got = {tuple(r) for r in
+               dedup.simhash_near_dups(docs, radius).collect()}
+        assert got == truth, radius
+        assert len(truth) > 0
+
+
+def test_hamming_band_keys_layout(spark):
+    """``max_hamming + 1`` bands partition the 64 bits: at radius 3 they
+    are the four 16-bit lanes, the bands of any radius recombine to the
+    hash, and radii outside 0..63 raise."""
+    h = -0x0123456789ABCDEF
+    u = h & ((1 << 64) - 1)
+    df = spark.createDataFrame([(h,)], "h long")
+    for radius in (0, 3, 6, 63):
+        keys = df.select(dedup.hamming_band_keys("h", radius)).first()[0]
+        n = radius + 1
+        assert [k.split(":")[0] for k in keys] == [f"b{j}" for j in range(n)]
+        assert sum((int(k.split(":")[1]) & ((1 << 64) - 1)) << (64 * j // n)
+                   for j, k in enumerate(keys)) == u
+    assert df.select(dedup.hamming_band_keys("h", 3)).first()[0] == \
+        [f"b{j}:{(u >> 16 * j) & 0xFFFF}" for j in range(4)]
+    scoped = df.select(dedup.hamming_band_keys(
+        "h", 1, prefix=F.lit("image:"))).first()[0]
+    assert [k.split(":b")[0] for k in scoped] == ["image", "image"]
+    for bad in (-1, 64):
+        with pytest.raises(ValueError):
+            dedup.hamming_band_keys("h", bad)
+
+
 def _py_simhash(tokens):
     """Unpacked pure-Python reference for the 64-bit md5 simhash."""
     import hashlib
@@ -160,11 +201,12 @@ def test_ann_lsh_recall_vs_bruteforce(spark):
     exact = {(r.query_id, r.vec_id)
              for r in similarity.cosine_topk_bruteforce(emb, qids, k=5).collect()}
     approx = {(r.query_id, r.vec_id)
-              for r in similarity.cosine_topk_lsh(emb, qids, dim, k=5,
-                                                  n_planes=4).collect()}
+              for r in similarity.cosine_topk_lsh_banded(
+                  emb, qids, dim, k=5, n_bands=1,
+                  planes_per_band=4).collect()}
     recall = len(exact & approx) / len(exact)
-    # single-signature LSH is the coarse baseline; the banded variant below
-    # is the real recall gate
+    # one band is single-signature LSH, the coarse baseline; the 8x3
+    # banding below is the real recall gate
     assert recall >= 0.15
 
 
@@ -255,11 +297,11 @@ def test_dup_clusters_chain_and_cliques(spark):
     assert not rows["b"].is_canonical
 
 
-def test_dup_clusters_star_matches_label_on_random_graphs(spark):
-    """Property test: the large-star/small-star path (the adversarial-depth
-    scale algorithm) and min-label propagation return IDENTICAL clusters on
-    random 200-node graphs — sparse, dense, and a 200-node path (worst-case
-    diameter, where label propagation needs its full O(diameter) rounds)."""
+def test_dup_clusters_matches_union_find_on_random_graphs(spark):
+    """Property test: min-label propagation returns the union-find
+    components (cluster id, size and canonical flag) on random 200-node
+    graphs — sparse and dense — and on a 60-node path, the worst-case
+    diameter, where it needs its full O(diameter) rounds."""
     import random
 
     def union_find(n, edges):
@@ -275,8 +317,10 @@ def test_dup_clusters_star_matches_label_on_random_graphs(spark):
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-        return {f"n{i:03d}": f"n{min(find(i), i):03d}" for i in range(n)
-                if any(i in e for e in edges)}
+        label = {f"n{i:03d}": f"n{min(find(i), i):03d}" for i in range(n)
+                 if any(i in e for e in edges)}
+        size = {c: list(label.values()).count(c) for c in label.values()}
+        return {d: (c, size[c], d == c) for d, c in label.items()}
 
     cases = []
     for seed, n_edges in ((7, 60), (11, 300)):
@@ -284,7 +328,7 @@ def test_dup_clusters_star_matches_label_on_random_graphs(spark):
         cases.append([(rng.randrange(200), rng.randrange(200))
                       for _ in range(n_edges)])
     # a 60-node path: diameter 59, where min-label propagation needs its
-    # full O(diameter) rounds but star converges in O(log^2 n)
+    # full O(diameter) rounds
     cases.append([(i, i + 1) for i in range(59)])
 
     for edges in cases:
@@ -292,27 +336,20 @@ def test_dup_clusters_star_matches_label_on_random_graphs(spark):
         pairs = spark.createDataFrame(
             [(f"n{min(a, b):03d}", f"n{max(a, b):03d}") for a, b in edges],
             "doc_a string, doc_b string")
-        label = {r.doc_id: (r.cluster_id, r.cluster_size, r.is_canonical)
-                 for r in dedup.dup_clusters(pairs, max_iter=80).collect()}
-        star = {r.doc_id: (r.cluster_id, r.cluster_size, r.is_canonical)
-                for r in dedup.dup_clusters(pairs,
-                                            algorithm="star").collect()}
-        assert star == label
-        truth = union_find(200, edges)
-        assert {d: c for d, (c, _, _) in label.items()} == truth
+        got = {r.doc_id: (r.cluster_id, r.cluster_size, r.is_canonical)
+               for r in dedup.dup_clusters(pairs, max_iter=80).collect()}
+        assert got == union_find(200, edges)
 
 
 def test_dup_clusters_raises_when_not_converged(spark):
     """A 60-node path needs ~60 label-propagation rounds: at the default
-    ``max_iter=25`` (and the star path capped at one round) both raise
-    instead of returning partially propagated clusters."""
+    ``max_iter=25`` it raises instead of returning partially propagated
+    clusters."""
     pairs = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)],
         "doc_a string, doc_b string")
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.dup_clusters(pairs)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup._dup_clusters_star(pairs, max_iter=1)
 
 
 def test_lse_zumstein_vector_spark_matches_twin(spark):

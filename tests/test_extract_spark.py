@@ -388,6 +388,28 @@ def test_crossmodal_near_dups_matches_twin_and_never_crosses_kinds(spark):
     assert all(kind_of[a] == kind_of[b] == k for a, b, k, _ in got)
 
 
+def test_media_near_dups_wide_radius_matches_allpairs(spark):
+    """Above radius 3 the band count grows with the radius, so the band
+    join still returns every same-kind pair the all-pairs Hamming filter
+    over ``media_dhash`` does."""
+    from akf_cdparser_spark.analytics import multimodal
+
+    docs = X.docs_dataframe(spark, 40)
+    media = multimodal.synth_media_pooled_mixed(spark, docs, pool=5,
+                                                jitter=20).cache()
+    hs = sorted((r.media_ref, r.kind, r.dhash)
+                for r in multimodal.media_dhash(media).collect())
+    radius = 6
+    truth = {(a, b, k, bin((x ^ y) & ((1 << 64) - 1)).count("1"))
+             for i, (a, k, x) in enumerate(hs) for b, kb, y in hs[i + 1:]
+             if kb == k
+             and bin((x ^ y) & ((1 << 64) - 1)).count("1") <= radius}
+    got = {tuple(r) for r in
+           multimodal.media_near_dups(media, max_hamming=radius).collect()}
+    assert got == truth
+    assert max(t[3] for t in truth) > 3
+
+
 def test_rewrite_media_refs_shared_ref_mapping(spark):
     """A non-canonical ref referenced by SEVERAL docs yields one mapping
     row per occurrence; the broadcast remap must collapse the copies
