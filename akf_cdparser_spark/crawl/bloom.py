@@ -1,7 +1,8 @@
-"""Partitioned seen-index shards: bloom/cuckoo filter + exact sorted hashes.
+"""Partitioned seen-index runs: bloom/cuckoo filter + exact sorted hashes.
 
-Role (north rule + SURVEY.md §7.2): each shard carries TWO co-located
-structures over the same ``url_hash64 % n_shards`` slice of the seen set:
+Role (north rule + SURVEY.md §7.2): a run carries one row per shard, and
+each row holds TWO co-located structures over the same
+``url_hash64 % n_shards`` slice of the generations the run covers:
 
 * a bloom filter (or, for high-churn shards, a cuckoo filter — supports
   deletion for recrawl invalidation) as the throughput fast path; and
@@ -9,14 +10,23 @@ structures over the same ``url_hash64 % n_shards`` slice of the seen set:
   seen" from the filter resolves to an exact verdict with a local binary
   search inside the same task.
 
-The probe (``probe_seen``) therefore returns an *exact* membership verdict
-as of the shard build — the crawl loop no longer shuffles the full seen set
-per generation; only the small per-generation deltas written since the last
-shard rebuild need a residual anti-join. At the 10^10-URL design point the
-exact arrays are ~80 GB total (8 B/URL): size ``n_shards`` so one shard
-(~80 GB / n_shards, plus ~1.5 GB of filter bits / n_shards) fits a task —
-the bits/arrays NEVER pass through the driver; probing cogroups candidates
-with their shard blob so each task loads exactly one shard.
+Run invariant (a binary counter over generations): run R_0 covers the
+bootstrap seen set; run R_g (g >= 1) covers generations
+``g - lowbit(g) + 1 .. g`` and is built by ``merge_run`` from generation
+g's seen delta plus the runs it absorbs. The live runs after generation g
+are R_0 and R_h for h = g, g with its lowest set bit cleared, and so on
+down to a power of two: ``popcount(g) + 1`` runs that together cover
+exactly generations 0..g, each hash in exactly one of them. A hash is
+rewritten at most ceil(log2 G) times over G generations (a power-of-two
+generation folds every run but R_0), so upkeep is amortized O(delta *
+log G), and the seen table itself is never read back.
+
+The probe (``probe_seen``) cogroups candidates with every live run's row
+of their shard and returns an *exact* membership verdict against all of
+them in one task. At the 10^10-URL design point the exact arrays are
+~80 GB total (8 B/URL): size ``n_shards`` so one shard (~80 GB /
+n_shards, plus ~1.5 GB of filter bits / n_shards) fits a task — the
+bits/arrays are NEVER collected; they stay on the executors.
 
 Filters stay LOSSLESS for inserted items (bloom by construction; cuckoo via
 an overflow list — a displaced fingerprint is never dropped), so the fast
@@ -27,15 +37,15 @@ with the 4-byte overflow-count header + the ``exact`` column). Probes REJECT
 unknown kinds instead of misparsing an old blob, so a store written in an
 older format fails loudly; rebuild its shards with ``build_shards``.
 
-A shard whose insert-rate churn between rebuilds exceeds
-``CHURN_RATE_THRESHOLD`` is rebuilt as a cuckoo filter; a dense bloom (fill
-beyond ``FILL_SPILL_THRESHOLD``) spills too.
+A shard row whose growth (items added over the shard's size before them)
+exceeds ``CHURN_RATE_THRESHOLD`` is built as a cuckoo filter; a dense bloom
+(fill beyond ``FILL_SPILL_THRESHOLD``) spills too.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -57,7 +67,7 @@ BLOOM_BITS_PER_ITEM = 12      # ~0.3% fp at k=4
 BLOOM_K = 4
 CUCKOO_BUCKETS_POW = 12       # 4096 buckets x 4 slots x uint16
 FILL_SPILL_THRESHOLD = 0.35   # bloom fill ratio safety spill
-CHURN_RATE_THRESHOLD = 0.5    # insert-rate between rebuilds that spills
+CHURN_RATE_THRESHOLD = 0.5    # growth over the prior shard size that spills
 
 
 def _bloom_positions(h: np.ndarray, m: int) -> list[np.ndarray]:
@@ -178,16 +188,48 @@ def _cuckoo_contains(table: np.ndarray, hashes: np.ndarray,
     return out
 
 
+def _by_shard(df: DataFrame, n_shards: int) -> DataFrame:
+    """``df`` hash-partitioned on ``shard_id`` (derived from ``url_hash``
+    when ``df`` has none) into min(n_shards, cores) partitions — the layout
+    every shard-keyed group/cogroup below runs on, so its Python stage is
+    one wave of tasks: there are only n_shards keys to spread, and each
+    extra wave pays the per-task Python worker overhead again."""
+    if "shard_id" not in df.columns:
+        df = df.withColumn("shard_id", F.pmod(F.col("url_hash"),
+                                              F.lit(n_shards)).cast("int"))
+    width = min(n_shards, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(width, "shard_id")
+
+
+def _shard_row(shard_id: int, hashes: np.ndarray, churned: bool,
+               bits_per_item: int = BLOOM_BITS_PER_ITEM) -> pd.DataFrame:
+    """One shard row of a run over ``hashes``."""
+    n = len(hashes)
+    # m_bits MUST be byte-aligned: the probe side recovers it as
+    # len(blob) * 8, and a build/probe disagreement of even one bit
+    # shifts every double-hashed position -> silent false negatives
+    # (=> re-crawls). Regression: test_bloom_odd_shard_sizes.
+    m_bits = (max(1024, int(n * bits_per_item)) + 7) // 8 * 8
+    fill = (n * BLOOM_K) / m_bits
+    if churned or fill > FILL_SPILL_THRESHOLD:
+        blob, kind = _build_cuckoo(hashes), "cuckoo2"
+    else:
+        blob, kind = _build_bloom(hashes, m_bits), "bloom2"
+    return pd.DataFrame([{"shard_id": shard_id, "bits": blob,
+                          "exact": np.sort(hashes).tobytes(), "n_items": n,
+                          "kind": kind}])
+
+
 def build_shards(seen: DataFrame, n_shards: int = 32,
                  bits_per_item: int = BLOOM_BITS_PER_ITEM,
                  prev_counts: dict[int, int] | None = None,
                  churn_threshold: float = CHURN_RATE_THRESHOLD) -> DataFrame:
-    """seen(url_hash bigint) -> one filter row per shard, built with
-    applyInPandas (each shard's hashes land on one task).
+    """seen(url_hash bigint) -> one run, one row per non-empty shard, built
+    with applyInPandas (each shard's hashes land on one task).
 
-    ``prev_counts`` (shard_id -> n_items at the previous rebuild, tiny
-    metadata — NOT the bits) drives the churn spill: a shard whose item
-    count grew by more than ``churn_threshold`` since the last rebuild is
+    ``prev_counts`` (shard_id -> n_items before ``seen`` grew to its
+    current size, tiny metadata — NOT the bits) drives the churn spill: a
+    shard whose item count grew by more than ``churn_threshold`` over it is
     materialized as a cuckoo filter so upcoming inserts/deletes are cheap;
     a bloom passing the fill-ratio safety also spills."""
     prev_counts = prev_counts or {}
@@ -195,41 +237,50 @@ def build_shards(seen: DataFrame, n_shards: int = 32,
     def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         shard_id = int(key[0])
         hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-        n = len(hashes)
-        # m_bits MUST be byte-aligned: the probe side recovers it as
-        # len(blob) * 8, and a build/probe disagreement of even one bit
-        # shifts every double-hashed position -> silent false negatives
-        # (=> re-crawls). Regression: test_bloom_odd_shard_sizes.
-        m_bits = (max(1024, int(n * bits_per_item)) + 7) // 8 * 8
-        fill = (n * BLOOM_K) / m_bits
         prev = prev_counts.get(shard_id)
-        churned = prev is not None and prev > 0 and \
-            (n - prev) / prev > churn_threshold
-        if churned or fill > FILL_SPILL_THRESHOLD:
-            blob, kind = _build_cuckoo(hashes), "cuckoo2"
-        else:
-            blob, kind = _build_bloom(hashes, m_bits), "bloom2"
-        exact = np.sort(hashes).tobytes()
-        return pd.DataFrame([{"shard_id": shard_id, "bits": blob,
-                              "exact": exact, "n_items": n, "kind": kind}])
+        churned = bool(prev) and (len(hashes) - prev) / prev > churn_threshold
+        return _shard_row(shard_id, hashes, churned, bits_per_item)
 
-    keyed = seen.select(
-        (F.pmod(F.col("url_hash"), F.lit(n_shards))).cast("int").alias("shard_id"),
-        "url_hash")
-    return keyed.groupBy("shard_id").applyInPandas(build, SHARD_SCHEMA)
+    return (_by_shard(seen.select("url_hash"), n_shards)
+            .groupBy("shard_id").applyInPandas(build, SHARD_SCHEMA))
 
 
-def shard_counts(shards: DataFrame) -> dict[int, int]:
-    """Tiny metadata projection (shard_id -> n_items) for the churn spill;
-    never touches the blob column (column pruning keeps the scan narrow)."""
-    return {int(r["shard_id"]): int(r["n_items"])
-            for r in shards.select("shard_id", "n_items").collect()}
+def merge_run(delta: DataFrame, fold: list[DataFrame], keep: list[DataFrame],
+              n_shards: int = 32) -> DataFrame:
+    """A new run over ``delta`` (url_hash bigint, hashes in no live run)
+    and the runs in ``fold``, shard by shard in one cogroup: each shard's
+    delta hashes and the folded rows' exact arrays go through
+    ``_shard_row``, as in ``build_shards``. ``keep`` are the live runs the
+    new one does not absorb; only their ``n_items`` travel (the blobs are
+    projected away before the shuffle), so the churn spill sees the
+    shard's whole size before the delta: prev = n_items summed over
+    ``fold`` and ``keep`` (together never empty: R_0 is always live).
+    Shards left with no hash get no row."""
+    meta = [r.select("shard_id", F.lit(None).cast("binary").alias("bits"),
+                     F.lit(None).cast("binary").alias("exact"),
+                     "n_items", "kind") for r in keep]
+    runs = _by_shard(reduce(DataFrame.unionByName, fold + meta), n_shards)
+    empty = pd.DataFrame(columns=[f.name for f in SHARD_SCHEMA.fields])
+
+    def merge(key: tuple, delta_pdf: pd.DataFrame,
+              runs_pdf: pd.DataFrame) -> pd.DataFrame:
+        new = delta_pdf["url_hash"].to_numpy(dtype=np.int64)
+        hashes = np.concatenate(
+            [new] + [np.frombuffer(bytes(e), dtype=np.int64)
+                     for e in runs_pdf["exact"] if e is not None])
+        if not len(hashes):
+            return empty
+        prev = int(runs_pdf["n_items"].sum())
+        churned = bool(prev) and len(new) / prev > CHURN_RATE_THRESHOLD
+        return _shard_row(int(key[0]), hashes, churned)
+
+    return (_by_shard(delta.select("url_hash"), n_shards).groupBy("shard_id")
+            .cogroup(runs.groupBy("shard_id"))
+            .applyInPandas(merge, SHARD_SCHEMA))
 
 
-def _filter_maybe(shard_pdf: pd.DataFrame, hashes: np.ndarray) -> np.ndarray:
-    """Fast-path filter verdict for one shard's candidate hashes."""
-    kind = shard_pdf["kind"].iloc[0]
-    blob = bytes(shard_pdf["bits"].iloc[0])
+def _filter_maybe(kind: str, blob: bytes, hashes: np.ndarray) -> np.ndarray:
+    """Fast-path filter verdict of one shard row for ``hashes``."""
     if kind == "bloom2":
         bits = np.frombuffer(blob, dtype=np.uint8)
         return _bloom_contains(bits, hashes, len(blob) * 8)
@@ -244,39 +295,39 @@ def _filter_maybe(shard_pdf: pd.DataFrame, hashes: np.ndarray) -> np.ndarray:
 def prefilter_candidates(candidates: DataFrame, shards: DataFrame,
                          n_shards: int = 32) -> DataFrame:
     """Tag candidate URLs with the FILTER verdict ``maybe_seen`` (bloom/
-    cuckoo only — no exact resolution) without moving filter bits through
-    the driver: candidates are cogrouped with their shard blob on
-    ``shard_id`` so each task loads exactly one shard. URLs tagged False
-    are DEFINITELY unseen; True still needs exact resolution (fp possible).
+    cuckoo only — no exact resolution) without collecting filter bits:
+    candidates are cogrouped with their shard's rows (one per
+    run in ``shards``) on ``shard_id`` so each task loads exactly one
+    shard. URLs tagged False are DEFINITELY unseen; True still needs exact
+    resolution (fp possible).
     """
     out_fields = [f for f in candidates.schema.fields]
     schema = T.StructType(out_fields + [T.StructField("maybe_seen", T.BooleanType())])
     out_cols = [f.name for f in out_fields] + ["maybe_seen"]
 
-    keyed = candidates.withColumn(
-        "shard_id", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
-
     def probe(cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(cand_pdf):
             return pd.DataFrame(columns=out_cols)
-        if not len(shard_pdf):
-            return cand_pdf.drop(columns=["shard_id"]).assign(maybe_seen=False)
         hashes = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
-        maybe = _filter_maybe(shard_pdf, hashes)
+        maybe = np.zeros(len(hashes), dtype=bool)
+        for kind, blob in zip(shard_pdf["kind"], shard_pdf["bits"]):
+            maybe |= _filter_maybe(kind, bytes(blob), hashes)
         return cand_pdf.drop(columns=["shard_id"]).assign(maybe_seen=maybe)
 
-    return (keyed.groupBy("shard_id")
+    shards = _by_shard(shards, n_shards)
+    return (_by_shard(candidates, n_shards).groupBy("shard_id")
             .cogroup(shards.groupBy("shard_id"))
             .applyInPandas(probe, schema))
 
 
 def probe_seen(candidates: DataFrame, shards: DataFrame, n_shards: int = 32,
                dedupe: bool = False) -> DataFrame:
-    """EXACT membership verdict (``seen_asof`` = seen as of the shard build)
-    in one cogroup shuffle: the bloom/cuckoo filter short-circuits definite
-    misses, survivors are resolved with a binary search over the shard's
-    sorted exact hash array — all local to the shard's task, nothing through
-    the driver and no full-seen-set shuffle.
+    """EXACT membership verdict (``seen_asof`` = in any run of ``shards``)
+    in one cogroup shuffle: per run row of the candidate's shard, the
+    bloom/cuckoo filter short-circuits definite misses and survivors are
+    resolved with a binary search over that row's sorted exact hash array —
+    all local to the shard's task, nothing collected and no
+    full-seen-set shuffle.
 
     ``dedupe=True`` additionally collapses duplicate candidate ``url_hash``
     rows to the deterministic min-reduce (min url/host/next_fetch_time/
@@ -288,30 +339,26 @@ def probe_seen(candidates: DataFrame, shards: DataFrame, n_shards: int = 32,
     out_cols = [f.name for f in out_fields] + ["seen_asof"]
     val_cols = [c for c in candidates.columns if c != "url_hash"]
 
-    keyed = candidates.withColumn(
-        "shard_id", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
-
     def probe(cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(cand_pdf):
             return pd.DataFrame(columns=out_cols)
         cand_pdf = cand_pdf.drop(columns=["shard_id"])
-        if dedupe and len(cand_pdf):
+        if dedupe:
             cand_pdf = (cand_pdf.groupby("url_hash", as_index=False)[val_cols]
                         .min()[[*cand_pdf.columns]])
         hashes = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
-        if not len(shard_pdf):
-            return cand_pdf.assign(seen_asof=False)
-        maybe = _filter_maybe(shard_pdf, hashes)
         seen = np.zeros(len(hashes), dtype=bool)
-        if maybe.any():
-            exact = np.frombuffer(
-                bytes(shard_pdf["exact"].iloc[0]), dtype=np.int64)
-            if len(exact):
+        for kind, blob, exact in zip(shard_pdf["kind"], shard_pdf["bits"],
+                                     shard_pdf["exact"]):
+            maybe = ~seen & _filter_maybe(kind, bytes(blob), hashes)
+            if maybe.any():  # a row with no members never says maybe
+                exact = np.frombuffer(bytes(exact), dtype=np.int64)
                 h = hashes[maybe]
                 pos = np.minimum(np.searchsorted(exact, h), len(exact) - 1)
                 seen[maybe] = exact[pos] == h
         return cand_pdf.assign(seen_asof=seen)
 
-    return (keyed.groupBy("shard_id")
+    shards = _by_shard(shards, n_shards)
+    return (_by_shard(candidates, n_shards).groupBy("shard_id")
             .cogroup(shards.groupBy("shard_id"))
             .applyInPandas(probe, schema))

@@ -6,12 +6,10 @@ path, resolve ``.``/``..`` segments, sort query parameters, strip trailing
 slash on non-root paths. Implemented as a pandas UDF (string surgery over
 Arrow batches — no per-row Python through Spark's row serializer).
 
-Two hash planes, deliberately distinct:
-* ``url_hash64`` — md5-derived identity hash. Drives dedupe, ordering
-  tie-breaks and oracle comparison: any engine reproduces it bit-for-bit.
-* ``partition_hash`` — Spark's xxhash64, used ONLY for physical placement
-  (salted host partitioning); never appears in results, so engine-specific
-  hashing is safe there.
+``url_hash64`` is the md5-derived identity hash. It drives dedupe,
+ordering tie-breaks, politeness salts (``pmod(url_hash, n_salts)``) and
+seen-index sharding, and any engine reproduces it bit-for-bit, so the
+oracle compares against it directly.
 """
 
 from __future__ import annotations
@@ -76,13 +74,6 @@ def url_hash64(url_col: str | Column = "url") -> Column:
     CAST('0x' || substr(md5(url), 1, 15) AS BIGINT)."""
     c = F.col(url_col) if isinstance(url_col, str) else url_col
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-def partition_hash(host_col: str | Column, salt_col: Column | None = None) -> Column:
-    """Physical placement hash (xxhash64) with optional salt for hot hosts."""
-    c = F.col(host_col) if isinstance(host_col, str) else host_col
-    h = F.xxhash64(c)
-    return h + salt_col if salt_col is not None else h
 
 
 def hash64_py(url: str) -> int:

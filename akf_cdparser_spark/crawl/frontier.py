@@ -17,8 +17,9 @@ parallelism):
   extracted Beteiligungen company names resolved through the CD page-index
   dictionary;
 * disallowed URLs enter the seen set (decision made) without a fetch-log row;
-* every generation commits frontier/seen/fetch_log + lineage/metrics to the
-  state store — resume reads the latest committed generation.
+* every generation commits frontier/seen/fetch_log, its seen-index run and
+  lineage/metrics to the state store — resume reads the latest committed
+  generation.
 
 Scale shape (what keeps per-generation cost proportional to the GENERATION,
 never to the accumulated crawl state):
@@ -29,13 +30,15 @@ never to the accumulated crawl state):
   the seen set — a deferred row cannot have become seen (only scheduling or
   a robots-disallow marks seen, and both remove a URL from deferral) — so
   the seen check is O(new links), not O(frontier);
-* the seen check itself never shuffles the seen set: ``bloom.probe_seen``
-  cogroups pending candidates with their seen-index shard (bloom/cuckoo
-  fast path + exact sorted-hash resolution, task-local) and only the small
-  per-generation deltas written since the last shard rebuild need a
-  residual anti-join. Shard rebuilds run ASYNCHRONOUSLY and are adopted
-  whenever they land — staleness is exact by construction (probe covers
-  seen-as-of-rebuild, the delta anti-join covers the rest);
+* the seen check is ONE probe that never shuffles the seen set:
+  ``bloom.probe_seen`` cogroups pending candidates with their shard's rows
+  of every live seen-index run (bloom/cuckoo fast path + exact sorted-hash
+  resolution, task-local). The live runs after generation g cover exactly
+  generations 0..g (the binary-counter invariant in ``bloom``): bootstrap
+  writes R_0, and generation g writes R_g = its seen delta merged with the
+  runs of generations g - lowbit(g) + 1 .. g - 1 (``bloom.merge_run``),
+  built next to the parse and committed with the generation — so upkeep
+  grows with the delta, and ``run()`` never reads the ``seen`` table;
 * the politeness queue is a SALTED repartition-by-host-hash + two-phase
   top-k (hot CD volumes split across ``n_salts`` slices, then a per-host
   re-rank over <= budget*n_salts survivors; hosts within budget bypass both
@@ -55,20 +58,20 @@ never to the accumulated crawl state):
   that is the plan-truncation point, so NOTHING durable sits on the
   critical path;
 * commits PIPELINE fully: every table write (frontier snapshot, seen delta,
-  fetch_log, lineage, metrics) drains on a thread pool while the next
-  generation computes — background jobs tagged into a separate FAIR
-  scheduler pool so they share the cluster with (never head-block) the
-  critical path — and a generation's manifest record is appended only
-  once ALL of its writes landed (resume only ever sees fully-committed
-  generations; the async seen-shard rebuild reads explicit generation
-  paths and first awaits EVERY still-uncommitted generation's write
-  futures, so it never reads a partially-written seen delta).
+  seen-index run, fetch_log, lineage, metrics) drains on a thread pool
+  while the next generation computes — background jobs tagged into a
+  separate FAIR scheduler pool so they share the cluster with (never
+  head-block) the critical path — and a generation's manifest record is
+  appended only once ALL of its writes landed (resume only ever sees
+  fully-committed generations, so every run ``live_run_gens`` names at
+  resume is whole).
 """
 
 from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor, wait
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -100,10 +103,6 @@ SEEN_SCHEMA = T.StructType([
 
 _FCOLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
-# the seen-index shards are rebuilt (asynchronously) every this many
-# generations; in between, the residual anti-join covers the newer deltas
-BLOOM_REBUILD_EVERY = 2
-
 # frontier snapshots carry the deferred/pending split flag plus, for
 # deferred rows, the wake generation (earliest generation the row could
 # possibly be scheduled — see _schedule_tagged's _delay bound). Rows sleep
@@ -113,6 +112,17 @@ BLOOM_REBUILD_EVERY = 2
 FRONTIER_SNAP_SCHEMA = T.StructType(
     list(FRONTIER_SCHEMA.fields) + [T.StructField("validated", T.BooleanType()),
                                     T.StructField("wake_gen", T.LongType())])
+
+
+def live_run_gens(gen: int) -> list[int]:
+    """Generations whose seen-index runs are live after generation ``gen``:
+    0, and ``gen`` with 0, 1, 2, ... of its lowest set bits cleared —
+    ``popcount(gen) + 1`` runs (see ``bloom``)."""
+    out = [0]
+    while gen:
+        out.append(gen)
+        gen &= gen - 1
+    return sorted(out)
 
 
 def _with_identity(df: DataFrame) -> DataFrame:
@@ -393,14 +403,8 @@ class CrawlEngine:
         # the benchmark and the scaling/phase-evidence scripts
         self.phase_log: list[tuple[int, str, float]] = []
         self._pool = ThreadPoolExecutor(max_workers=8)
-        # shard_id -> n_items at the last rebuild (tiny metadata, drives the
-        # churn-based cuckoo spill)
-        self._shard_counts: dict[int, int] = {}
-        self._shards_df: DataFrame | None = None
-        self._shard_gen: int | None = None
-        self._rebuild_fut = None
-        # per-generation seen deltas newer than the adopted shards
-        self._recent: dict[int, DataFrame] = {}
+        # generation -> live seen-index run (see live_run_gens)
+        self._runs: dict[int, DataFrame] = {}
         # Crawl-delay per-host budgets (loaded from the gen-0 store table
         # by run(); None = global host_budget everywhere)
         self._budgets: DataFrame | None = None
@@ -416,7 +420,7 @@ class CrawlEngine:
         self._warm_futs: list = []
 
     def _submit_bg(self, fn, *args):
-        """Submit a BACKGROUND Spark job (durable writes, shard rebuilds)
+        """Submit a BACKGROUND Spark job (durable writes)
         tagged into the ``crawl_background`` scheduler pool. With
         ``spark.scheduler.mode=FAIR`` and no allocation file, pools are
         created on demand and the ROOT pool schedules fairly BETWEEN pools
@@ -448,17 +452,12 @@ class CrawlEngine:
             f.result()
 
     def close(self) -> None:
-        if self._rebuild_fut is not None:
-            try:
-                self._rebuild_fut.result()
-            finally:
-                self._rebuild_fut = None
         self._pool.shutdown(wait=True)
-        for df in (self._docs_slim, self._index, self._shards_df):
+        for df in (self._docs_slim, self._index, *self._runs.values()):
             if df is not None:
                 df.unpersist()
         self._docs_ref = self._docs_slim = self._index = None
-        self._shards_df, self._shard_gen = None, None
+        self._runs = {}
 
     # -- state access -------------------------------------------------------
 
@@ -484,23 +483,25 @@ class CrawlEngine:
         # A recrawl epoch starts from the previous epoch's seen set minus
         # the stale URLs (``carry_seen_for_recrawl``), so refetches flow
         # through the ordinary probe/schedule path with no tombstone logic
-        # in the append-only within-epoch machinery. The carry is indexed
-        # into gen-0 seen shards at once, so the first generations probe it
-        # instead of anti-joining all of it as a residual delta.
+        # in the append-only within-epoch machinery. The gen-0 delta (the
+        # carry, or nothing) is indexed into run R_0 at once, so every
+        # generation probes runs, the first one included.
         frontier = (seeds_frontier(self.spark, seeds)
                     .withColumn("validated", F.lit(False))
                     .withColumn("wake_gen", F.lit(None).cast("long")))
         self.store.write("frontier", frontier, 0)
-        # repartition(1) forces a schema-bearing part file for the empty
-        # delta — a zero-partition write would leave an unreadable directory
-        seen0 = (seen.select([f.name for f in SEEN_SCHEMA.fields])
-                 if seen is not None
-                 else self._empty(SEEN_SCHEMA).repartition(1))
-        self.store.write("seen", seen0, 0)
-        if seen is not None:
-            written = self.store.read("seen", 0, schema=SEEN_SCHEMA)
-            self.store.write("bloom_shards", bloom.build_shards(
-                written.select("url_hash"), self.n_shards), 0)
+        # repartition(1) forces a schema-bearing part file for an empty
+        # table — a zero-partition write would leave an unreadable directory
+        if seen is None:
+            self.store.write("seen",
+                             self._empty(SEEN_SCHEMA).repartition(1), 0)
+            run0 = self._empty(bloom.SHARD_SCHEMA).repartition(1)
+        else:
+            self.store.write(
+                "seen", seen.select([f.name for f in SEEN_SCHEMA.fields]), 0)
+            run0 = bloom.build_shards(
+                self.store.read("seen", 0, schema=SEEN_SCHEMA), self.n_shards)
+        self.store.write("bloom_shards", run0, 0)
         # ``host_budgets`` (host, budget — see crawl_delay_budgets) is
         # politeness DATA: persisted once here, read back by every run()
         # and resume, never a constructor arg, so wake_gen bounds derived
@@ -510,7 +511,7 @@ class CrawlEngine:
                              host_budgets.select("host", "budget"), 0)
         self.store.write("robots", self.spark.createDataFrame(
             robots_rules, "host string, rule string, allow boolean"), 0)
-        self.store.commit(0, ["frontier", "seen", "robots"],
+        self.store.commit(0, ["frontier", "seen", "bloom_shards", "robots"],
                           {"bootstrap": True, "host_budget": self.host_budget,
                            "n_salts": self.n_salts})
 
@@ -531,82 +532,15 @@ class CrawlEngine:
             return cores
         return max(8, min(4 * cores, last_scheduled // 2000 + 8))
 
-    # -- shard / delta lifecycle ---------------------------------------------
+    # -- seen-index runs -----------------------------------------------------
 
-    def _load_shards(self, start_gen: int) -> None:
-        """Adopt the newest seen-index shards <= start_gen."""
-        if self._shards_df is not None:
-            self._shards_df.unpersist()
-        self._shards_df, self._shard_gen = None, None
-        self._shard_counts = {}
-        for g in range(start_gen, -1, -1):
-            if self.store.exists("bloom_shards", g):
-                self._shards_df = self.store.read(
-                    "bloom_shards", g, schema=bloom.SHARD_SCHEMA).persist()
-                self._shard_gen = g
-                self._shard_counts = bloom.shard_counts(self._shards_df)
-                return
-
-    def _load_recent(self, start_gen: int) -> None:
-        lo = 0 if self._shard_gen is None else self._shard_gen + 1
-        self._recent = {g: self.store.read("seen", g, schema=SEEN_SCHEMA)
-                        for g in range(lo, start_gen + 1)
-                        if self.store.exists("seen", g)}
-
-    def _recent_union(self) -> DataFrame | None:
-        if not self._recent:
-            return None
-        dfs = [self._recent[g] for g in sorted(self._recent)]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    def _maybe_rebuild(self, gen: int, wait_for=()) -> None:
-        """``wait_for``: EVERY outstanding write future across all pending
-        (uncommitted) generations, not just gen G's — ``read_upto('seen',
-        G)`` reads gens <= G, and an EARLIER generation's seen write may
-        still be in flight when G's rebuild fires (commits drain
-        non-blockingly in the loop). Waiting only on G's futures would let
-        the rebuild read a partial gen G-1 directory, build shards missing
-        those hashes, and then ``_adopt_rebuild`` would prune
-        ``_recent[G-1]`` — silently re-schedulable URLs. No deadlock: the
-        waited futures were submitted EARLIER to the same FIFO pool, so
-        they can never be queued behind the rebuild worker that blocks on
-        them."""
-        if gen % BLOOM_REBUILD_EVERY or self._rebuild_fut is not None:
-            return
-        prev = dict(self._shard_counts)
-        deps = tuple(wait_for)
-
-        def job(G=gen, prev_counts=prev):
-            for d in deps:
-                d.result()
-            # explicit gens 0..G: never races a newer delta mid-write
-            seen_upto = self.store.read_upto(
-                "seen", G, schema=SEEN_SCHEMA).select("url_hash")
-            shards = bloom.build_shards(seen_upto, self.n_shards,
-                                        prev_counts=prev_counts)
-            self.store.write("bloom_shards", shards, G)
-            return G
-
-        self._rebuild_fut = self._submit_bg(job)
-
-    def _adopt_rebuild(self, block: bool = False) -> None:
-        fut = self._rebuild_fut
-        if fut is None or (not block and not fut.done()):
-            return
-        g = fut.result()
-        self._rebuild_fut = None
-        old = self._shards_df
-        self._shards_df = self.store.read(
-            "bloom_shards", g, schema=bloom.SHARD_SCHEMA).persist()
-        self._shard_gen = g
-        self._shard_counts = bloom.shard_counts(self._shards_df)
-        for stale in [k for k in self._recent if k <= g]:
-            self._recent.pop(stale)
-        if old is not None:
-            old.unpersist()
+    def _load_runs(self, start_gen: int) -> None:
+        """Adopt the live runs of the committed generation ``start_gen``."""
+        for df in self._runs.values():
+            df.unpersist()
+        self._runs = {g: self.store.read("bloom_shards", g,
+                                         schema=bloom.SHARD_SCHEMA).persist()
+                      for g in live_run_gens(start_gen)}
 
     def _drain_commits(self, pending: list[dict], block: bool) -> None:
         """Commit generations IN ORDER once all their write-behind futures
@@ -618,8 +552,8 @@ class CrawlEngine:
                 return
             for f in entry["futures"]:
                 f.result()  # surface write failures before the commit record
-            self.store.commit(entry["gen"], ["frontier", "seen", "fetch_log"],
-                              entry["stats"])
+            self.store.commit(entry["gen"], ["frontier", "seen", "fetch_log",
+                                             "bloom_shards"], entry["stats"])
             for df in entry["cached"]:
                 df.unpersist()
             pending.pop(0)
@@ -676,8 +610,7 @@ class CrawlEngine:
             # so no job ever races the caches' first materialization.
             self._warm_futs = [self._submit_bg(self._docs_slim.count),
                                self._submit_bg(self._index.count)]
-        self._load_shards(start_gen)
-        self._load_recent(start_gen)
+        self._load_runs(start_gen)
         deferred, pending_links = self._load_frontier(start_gen)
         stats0 = self.store.latest_stats()
         # Persisted wake_gen values are lower bounds derived from
@@ -697,7 +630,6 @@ class CrawlEngine:
         try:
             for gen in range(start_gen + 1, start_gen + 1 + generations):
                 t0 = time.time()
-                self._adopt_rebuild()
                 self._drain_commits(pending_commits, block=False)
                 self.spark.conf.set("spark.sql.shuffle.partitions",
                                     str(self._auto_width(last_sched)))
@@ -718,10 +650,6 @@ class CrawlEngine:
                 totals["docs_parsed"] += stats["docs_parsed"]
                 totals["wall_ms"] += stats["wall_ms"]
                 last_sched = stats["urls_scheduled"]
-                # the rebuild must see COMPLETE seen files for every gen it
-                # reads — include all still-uncommitted generations' writes
-                self._maybe_rebuild(gen, wait_for=[
-                    f for e in pending_commits for f in e["futures"]])
                 if stats["urls_scheduled"] == 0:
                     break
         finally:
@@ -731,8 +659,6 @@ class CrawlEngine:
             try:
                 self._drain_commits(pending_commits, block=True)
             finally:
-                # shards must land before resume/close can read the store
-                self._adopt_rebuild(block=True)
                 self.spark.conf.set("spark.sql.shuffle.partitions",
                                     prev_shuffle)
                 self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -764,25 +690,14 @@ class CrawlEngine:
         awake = deferred.filter(F.col("wake_gen") <= gen).select(_FCOLS)
         asleep = deferred.filter(F.col("wake_gen") > gen)
 
-        # 1+2. NEW candidates only: dedupe + exact seen-probe fused into one
-        # cogroup shuffle; residual anti-join against post-shard deltas.
-        # (Deferred rows are validated-unseen by construction — see module
-        # docstring — and skip all of this.)
-        if self._shards_df is not None:
-            checked = bloom.probe_seen(pending, self._shards_df,
-                                       self.n_shards, dedupe=True)
-            new_cand = checked.filter(~F.col("seen_asof")).drop("seen_asof")
-        else:
-            new_cand = (pending.groupBy("url_hash")
-                        .agg(F.min("url").alias("url"),
-                             F.min("host").alias("host"),
-                             F.min("next_fetch_time").alias("next_fetch_time"),
-                             F.min("depth").alias("depth"))
-                        .select(_FCOLS))
-        recent = self._recent_union()
-        if recent is not None:
-            new_cand = new_cand.join(recent.select("url_hash"),
-                                     "url_hash", "left_anti")
+        # 1+2. NEW candidates only: dedupe + exact seen-probe against every
+        # live run fused into one cogroup shuffle. (Deferred rows are
+        # validated-unseen by construction — see module docstring — and
+        # skip all of this.)
+        runs = reduce(DataFrame.unionByName,
+                      [self._runs[g] for g in sorted(self._runs)])
+        new_cand = (bloom.probe_seen(pending, runs, self.n_shards, dedupe=True)
+                    .filter(~F.col("seen_asof")).drop("seen_asof"))
 
         # 3. robots gate (broadcast prefix rules) on the new candidates;
         # persisted — feeds scheduling AND the seen delta
@@ -838,21 +753,28 @@ class CrawlEngine:
         cached.append(scheduled)
         _mark("schedule+sequence")
 
-        # seen is APPEND-ONLY: only this generation's delta is written.
-        # deferred_next and newly_seen depend only on the schedule-phase
-        # caches (tagged / gated / scheduled), NOT on the parse output, so
-        # their localCheckpoints are submitted NOW and run concurrently
-        # with the parse job below (guide §2.6: the checkpoint jobs
-        # back-fill executors the parse stage leaves idle) instead of
+        # seen is APPEND-ONLY: only this generation's delta is written, and
+        # run R_gen absorbs it plus the live runs newer than
+        # gen - lowbit(gen) (the older ones stay live untouched).
+        # deferred_next, newly_seen and the run depend only on the
+        # schedule-phase caches (tagged / gated / scheduled), NOT on the
+        # parse output, so their localCheckpoints are submitted NOW and run
+        # concurrently with the parse job below (guide §2.6: the checkpoint
+        # jobs back-fill executors the parse stage leaves idle) instead of
         # serializing after it. Only pending_next — derived from parsed —
-        # must wait. Both jobs may race the parse job on materializing the
+        # must wait. These jobs may race the parse job on materializing the
         # ``scheduled`` cache; duplicated partitions are computed from the
         # cached sort (cheap) and the cache layer keeps one copy.
         newly_seen = (scheduled.select("url_hash", "url")
                       .unionByName(disallowed.select("url_hash", "url"))
                       .withColumn("generation", F.lit(gen)))
+        cut = gen - (gen & -gen)
+        fold = [g for g in self._runs if g > cut]
+        run = bloom.merge_run(newly_seen, [self._runs[g] for g in fold],
+                              [r for g, r in self._runs.items() if g <= cut],
+                              self.n_shards)
         ck_early = [self._submit_fg(df.localCheckpoint)
-                    for df in (deferred_next, newly_seen)]
+                    for df in (deferred_next, newly_seen, run)]
 
         # 6. fetch + parse + discover (docs side stays put: broadcast keys);
         # the crawl-plane parse ships only link names + lineage + counts.
@@ -903,20 +825,23 @@ class CrawlEngine:
                    .groupBy("category")
                    .agg(F.sum("call_count").alias("call_count"))
                    .withColumn("generation", F.lit(gen)))
-        deferred_ck, seen_ck = [f.result() for f in ck_early]
+        deferred_ck, seen_ck, run_ck = [f.result() for f in ck_early]
         frontier_snapshot = (
             deferred_ck.withColumn("validated", F.lit(True))
             .unionByName(pending_ck.withColumn("validated", F.lit(False))
                          .withColumn("wake_gen", F.lit(None).cast("long"))))
         futures = [self._submit_bg(self.store.write, name, df, gen)
                    for name, df in (("seen", seen_ck),
+                                    ("bloom_shards", run_ck),
                                     ("frontier", frontier_snapshot),
                                     ("fetch_log", fetch_log_new),
                                     ("lineage", lineage),
                                     ("metrics", metrics))]
         _mark("state writes")
 
-        self._recent[gen] = seen_ck
+        for g in fold:
+            self._runs.pop(g).unpersist()
+        self._runs[gen] = run_ck
         return ({"urls_scheduled": n_scheduled, "docs_parsed": n_parsed},
                 deferred_ck, pending_ck, futures, cached)
 

@@ -117,20 +117,6 @@ class StateStore:
         return reader.parquet(
             os.path.join(self.root, table)).drop("gen")
 
-    def read_upto(self, table: str, generation: int, schema=None) -> DataFrame:
-        """Union of generations 0..generation — from EXPLICIT per-generation
-        paths (parquet) or a partition filter (Iceberg), so a background
-        reader (e.g. the async seen-shard rebuild) never races a concurrent
-        write of a newer generation's files."""
-        if self.catalog:
-            return self._conform(
-                self.spark.read.table(self._iceberg_name(table))
-                .filter(F.col("gen") <= generation).drop("gen"), schema)
-        paths = [self._path(table, g) for g in range(generation + 1)
-                 if os.path.exists(self._path(table, g))]
-        reader = self.spark.read.schema(schema) if schema else self.spark.read
-        return reader.parquet(*paths)
-
     def exists(self, table: str, generation: int) -> bool:
         if self.catalog:
             name = self._iceberg_name(table)

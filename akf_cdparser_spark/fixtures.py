@@ -487,12 +487,6 @@ def spans_to_text(spans: list[dict]) -> str:
     return "\n".join(s["text"] for s in text_spans)
 
 
-def synth_corpus(n_docs: int) -> list[dict]:
-    """[{doc_id, spans}] — the docs table rows."""
-    return [{"doc_id": doc_id_for(i), "spans": html_to_spans(synth_html(i, n_docs))}
-            for i in range(n_docs)]
-
-
 # ---------------------------------------------------------------------------
 # crawl-tier graph (FIXTURES.md §5)
 # ---------------------------------------------------------------------------
@@ -515,11 +509,6 @@ def seed_urls(n_seeds: int, n_docs: int) -> list[dict]:
     step = max(1, n_docs // max(1, n_seeds))
     return [{"url": url_for(i), "seq": k}
             for k, i in enumerate(range(0, n_docs, step))][:n_seeds]
-
-
-def out_links(i: int, n_docs: int) -> list[str]:
-    """Crawl out-links of doc i = its Beteiligungen targets."""
-    return [url_for(t) for t in beteiligung_targets(i, n_docs)]
 
 
 def robots_rules(n_docs: int) -> list[dict]:

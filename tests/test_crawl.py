@@ -291,7 +291,92 @@ def test_exhausted_frontier_then_resume(spark, tmp_path_factory):
     assert totals2["urls_scheduled"] == 0
     log2 = sorted((r.scheduled_seq, r.url) for r in engine2.fetch_log().collect())
     assert log2 == log1
+    # the empty-delta generations still wrote readable runs, which the
+    # resume loaded and the next empty generation folded
+    _assert_live_runs(engine2._runs, engine2.store.latest_generation(),
+                      _seen_gens(engine2))
     engine2.close()
+
+
+def _run_members(run) -> list[int]:
+    """Sorted url_hashes of a seen-index run; checks n_items per row."""
+    members = []
+    for r in run.collect():
+        exact = np.frombuffer(r.exact, dtype=np.int64)
+        assert r.n_items == len(exact)
+        members.extend(exact.tolist())
+    return sorted(members)
+
+
+def _seen_gens(engine) -> list[tuple[int, int]]:
+    return [(r.url_hash, r.generation) for r in engine.seen().collect()]
+
+
+def _assert_live_runs(runs: dict, gen: int, seen: list) -> None:
+    """After generation ``gen`` the engine holds popcount(gen)+1 runs whose
+    members are the seen hashes of generations 0..gen, each in exactly one
+    run."""
+    assert sorted(runs) == frontier.live_run_gens(gen)
+    assert len(runs) == bin(gen).count("1") + 1
+    members = sorted(h for run in runs.values() for h in _run_members(run))
+    assert members == sorted(h for h, g in seen if g <= gen)
+
+
+def test_seen_runs_binary_counter(spark, tmp_path):
+    """The seen-index runs follow the binary counter after every
+    generation of one run() (1..6) and across a resume at an even (6) and
+    at an odd (7) generation: the live runs are R_0 plus one run per set
+    bit of the generation, and together they hold exactly the seen set."""
+    docs = X.docs_dataframe(spark, N_DOCS, partitions=8)
+    engine = CrawlEngine(spark, str(tmp_path), N_DOCS, host_budget=HOST_BUDGET)
+    engine.bootstrap(SEEDS, ROBOTS)
+    for first, n_gens in ((1, 6), (7, 1), (8, 1)):
+        snaps = []
+        generation = engine._generation
+
+        def spy(gen, *args, engine=engine, generation=generation,
+                snaps=snaps):
+            assert sorted(engine._runs) == frontier.live_run_gens(gen - 1)
+            out = generation(gen, *args)
+            snaps.append((gen, dict(engine._runs)))
+            return out
+
+        engine._generation = spy
+        engine.run(docs, n_gens)
+        engine._generation = generation
+        seen = _seen_gens(engine)
+        assert [g for g, _ in snaps] == list(range(first, first + n_gens))
+        for gen, runs in snaps:
+            _assert_live_runs(runs, gen, seen)
+        engine.close()
+        engine = CrawlEngine(spark, str(tmp_path), N_DOCS,
+                             host_budget=HOST_BUDGET)
+    engine.close()
+
+
+def test_run_never_reads_seen_table(spark, tmp_path, monkeypatch):
+    """run() answers "seen?" from the seen-index runs alone: a spy on every
+    StateStore read sees the runs read and the seen table never, on a
+    first run and on a resume."""
+    from akf_cdparser_spark.crawl.storage import StateStore
+
+    docs = X.docs_dataframe(spark, N_DOCS, partitions=8)
+    engine = CrawlEngine(spark, str(tmp_path), N_DOCS, host_budget=HOST_BUDGET)
+    engine.bootstrap(SEEDS, ROBOTS)
+    reads = []
+    for name in ("read", "read_all", "exists"):
+        def spy(self, table, *args, _orig=getattr(StateStore, name),
+                **kwargs):
+            reads.append(table)
+            return _orig(self, table, *args, **kwargs)
+        monkeypatch.setattr(StateStore, name, spy)
+    engine.run(docs, 3)
+    engine.close()
+    resumed = CrawlEngine(spark, str(tmp_path), N_DOCS,
+                          host_budget=HOST_BUDGET)
+    resumed.run(docs, 1)
+    resumed.close()
+    assert "bloom_shards" in reads and "seen" not in reads
 
 
 def test_checkpoint_storage_bounded(spark, tmp_path_factory):
@@ -646,8 +731,8 @@ def test_recrawl_epoch_exact(spark, tmp_path, monkeypatch):
     its fetch log + final seen set match the sequential oracle given the
     same initial seen, byte-for-byte. Within-epoch seen state stays
     append-only; forgetting happens only at the boundary anti-join. The
-    carried seen set is probed through gen-0 shards from the first
-    generation on, never anti-joined as a residual delta."""
+    carried seen set is run R_0, which generation 1 probes as its only
+    live run."""
     from akf_cdparser_spark.crawl.frontier import (CrawlEngine,
                                                    carry_seen_for_recrawl)
     from akf_cdparser_spark.crawl.sitemaps import freshness_recrawl
@@ -685,12 +770,13 @@ def test_recrawl_epoch_exact(spark, tmp_path, monkeypatch):
     generation = e2._generation
 
     def spy(gen, *args):
-        entry.append((gen, e2._shard_gen, sorted(e2._recent)))
+        entry.append((gen, sorted(e2._runs), _run_members(e2._runs[0])))
         return generation(gen, *args)
 
     monkeypatch.setattr(e2, "_generation", spy)
     e2.run(docs, 3)
-    assert entry[0] == (1, 0, [])
+    carried = sorted(r.url_hash for r in carry.collect())
+    assert carried and entry[0] == (1, [0], carried)
     log2 = sorted((r.scheduled_seq, r.url_hash, r.url, r.doc_id, r.generation)
                   for r in e2.fetch_log().collect())
     seen2 = {r.url_hash: r.url for r in e2.seen().collect()}

@@ -75,7 +75,7 @@ def test_bootstrap_frontier_schema_is_generation_stable(spark, tmp_path):
            "documented acquisition blocker")
 def test_iceberg_catalog_roundtrip(tmp_path):
     """Full catalog-branch smoke against a local Iceberg hadoop catalog:
-    write/read/read_upto/read_all/exists plus failed-generation partition
+    write/read/read_all/exists plus failed-generation partition
     overwrite and legacy-schema conform — parity with the parquet backend's
     semantics."""
     from akf_cdparser_spark.session import get_spark
@@ -98,7 +98,6 @@ def test_iceberg_catalog_roundtrip(tmp_path):
     store.write("seen", seen0, 0)
     store.write("seen", seen1, 1)
     assert store.read("seen", 0).count() == 2
-    assert store.read_upto("seen", 1).count() == 3
     assert store.read_all("seen").count() == 3
     assert store.exists("seen", 1) and not store.exists("seen", 5)
     # failed-generation rerun overwrites ONLY its own partition
