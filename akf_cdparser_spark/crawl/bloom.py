@@ -201,17 +201,22 @@ def _by_shard(df: DataFrame, n_shards: int) -> DataFrame:
     return df.repartition(width, "shard_id")
 
 
-def _shard_row(shard_id: int, hashes: np.ndarray, churned: bool,
-               bits_per_item: int = BLOOM_BITS_PER_ITEM) -> pd.DataFrame:
-    """One shard row of a run over ``hashes``."""
+def _shard_row(shard_id: int, hashes: np.ndarray, n_new: int,
+               prev: int) -> pd.DataFrame:
+    """One shard row of a run over ``hashes``, ``n_new`` of which joined a
+    shard that held ``prev`` hashes (over all live runs) before them. The
+    churn spill: growth over a non-empty prior size above
+    ``CHURN_RATE_THRESHOLD`` builds a cuckoo filter, so upcoming
+    inserts/deletes are cheap; a bloom past the fill-ratio safety spills
+    too."""
     n = len(hashes)
     # m_bits MUST be byte-aligned: the probe side recovers it as
     # len(blob) * 8, and a build/probe disagreement of even one bit
     # shifts every double-hashed position -> silent false negatives
     # (=> re-crawls). Regression: test_bloom_odd_shard_sizes.
-    m_bits = (max(1024, int(n * bits_per_item)) + 7) // 8 * 8
-    fill = (n * BLOOM_K) / m_bits
-    if churned or fill > FILL_SPILL_THRESHOLD:
+    m_bits = (max(1024, n * BLOOM_BITS_PER_ITEM) + 7) // 8 * 8
+    churned = prev > 0 and n_new / prev > CHURN_RATE_THRESHOLD
+    if churned or (n * BLOOM_K) / m_bits > FILL_SPILL_THRESHOLD:
         blob, kind = _build_cuckoo(hashes), "cuckoo2"
     else:
         blob, kind = _build_bloom(hashes, m_bits), "bloom2"
@@ -220,26 +225,14 @@ def _shard_row(shard_id: int, hashes: np.ndarray, churned: bool,
                           "kind": kind}])
 
 
-def build_shards(seen: DataFrame, n_shards: int = 32,
-                 bits_per_item: int = BLOOM_BITS_PER_ITEM,
-                 prev_counts: dict[int, int] | None = None,
-                 churn_threshold: float = CHURN_RATE_THRESHOLD) -> DataFrame:
-    """seen(url_hash bigint) -> one run, one row per non-empty shard, built
-    with applyInPandas (each shard's hashes land on one task).
-
-    ``prev_counts`` (shard_id -> n_items before ``seen`` grew to its
-    current size, tiny metadata — NOT the bits) drives the churn spill: a
-    shard whose item count grew by more than ``churn_threshold`` over it is
-    materialized as a cuckoo filter so upcoming inserts/deletes are cheap;
-    a bloom passing the fill-ratio safety also spills."""
-    prev_counts = prev_counts or {}
+def build_shards(seen: DataFrame, n_shards: int = 32) -> DataFrame:
+    """seen(url_hash bigint) -> one run from scratch, one row per non-empty
+    shard, built with applyInPandas (each shard's hashes land on one task).
+    No shard has a prior size, so only the fill-ratio safety spills."""
 
     def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard_id = int(key[0])
         hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-        prev = prev_counts.get(shard_id)
-        churned = bool(prev) and (len(hashes) - prev) / prev > churn_threshold
-        return _shard_row(shard_id, hashes, churned, bits_per_item)
+        return _shard_row(int(key[0]), hashes, len(hashes), 0)
 
     return (_by_shard(seen.select("url_hash"), n_shards)
             .groupBy("shard_id").applyInPandas(build, SHARD_SCHEMA))
@@ -270,9 +263,8 @@ def merge_run(delta: DataFrame, fold: list[DataFrame], keep: list[DataFrame],
                      for e in runs_pdf["exact"] if e is not None])
         if not len(hashes):
             return empty
-        prev = int(runs_pdf["n_items"].sum())
-        churned = bool(prev) and len(new) / prev > CHURN_RATE_THRESHOLD
-        return _shard_row(int(key[0]), hashes, churned)
+        return _shard_row(int(key[0]), hashes, len(new),
+                          int(runs_pdf["n_items"].sum()))
 
     return (_by_shard(delta.select("url_hash"), n_shards).groupBy("shard_id")
             .cogroup(runs.groupBy("shard_id"))

@@ -513,7 +513,7 @@ class CrawlEngine:
             robots_rules, "host string, rule string, allow boolean"), 0)
         self.store.commit(0, ["frontier", "seen", "bloom_shards", "robots"],
                           {"bootstrap": True, "host_budget": self.host_budget,
-                           "n_salts": self.n_salts})
+                           "n_salts": self.n_salts, "n_shards": self.n_shards})
 
     def _auto_width(self, last_scheduled: int | None) -> int:
         """Shuffle width derived from generation row counts. The old
@@ -566,6 +566,15 @@ class CrawlEngine:
         start_gen = self.store.latest_generation()
         if start_gen is None:
             raise RuntimeError("bootstrap() first")
+        stats0 = self.store.latest_stats()
+        # Runs keep the shard_id they were built with and are never
+        # re-keyed, so a probe under another n_shards would cogroup
+        # candidates with the wrong rows and miss seen URLs.
+        if stats0.get("n_shards") != self.n_shards:
+            raise ValueError(
+                f"the store's seen-index runs are sharded with n_shards="
+                f"{stats0.get('n_shards')}; this engine has n_shards="
+                f"{self.n_shards}")
         prev_shuffle = self.spark.conf.get("spark.sql.shuffle.partitions")
         # The engine is its own adaptive manager: shuffle width is derived
         # per generation from the last scheduled count (_auto_width), skew
@@ -612,7 +621,6 @@ class CrawlEngine:
                                self._submit_bg(self._index.count)]
         self._load_runs(start_gen)
         deferred, pending_links = self._load_frontier(start_gen)
-        stats0 = self.store.latest_stats()
         # Persisted wake_gen values are lower bounds derived from
         # floor((rank-1)/host_budget) — valid ONLY under the budget in force
         # when they were written. Resuming with a LARGER budget would make
@@ -641,9 +649,11 @@ class CrawlEngine:
                 stats["wall_ms"] = int((time.time() - t0) * 1000)
                 # the manifest records the politeness params in force when
                 # this generation's wake_gen values were derived — resume
-                # validates against them (see run() budget-change handling)
+                # validates against them (see run() budget-change handling),
+                # and the shard count its runs are keyed by
                 stats["host_budget"] = self.host_budget
                 stats["n_salts"] = self.n_salts
+                stats["n_shards"] = self.n_shards
                 pending_commits.append({"gen": gen, "stats": stats,
                                         "futures": futures, "cached": cached})
                 totals["urls_scheduled"] += stats["urls_scheduled"]

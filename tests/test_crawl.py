@@ -184,6 +184,30 @@ def test_resume_with_larger_budget_stays_exact(spark, tmp_path_factory):
         mixed["seen"]
 
 
+def test_resume_with_other_n_shards_raises(spark, tmp_path):
+    """Seen-index runs keep the shard_id they were built with, so a resume
+    under another n_shards would probe the wrong rows and re-crawl seen
+    URLs; the manifest records n_shards and run() refuses the mismatch
+    before it reads or writes any generation."""
+    docs = X.docs_dataframe(spark, N_DOCS, partitions=8)
+    engine = CrawlEngine(spark, str(tmp_path), N_DOCS, host_budget=HOST_BUDGET,
+                         n_shards=8)
+    engine.bootstrap(SEEDS, ROBOTS)
+    engine.run(docs, 2)
+    engine.close()
+    for n_shards in (4, 16):
+        other = CrawlEngine(spark, str(tmp_path), N_DOCS,
+                            host_budget=HOST_BUDGET, n_shards=n_shards)
+        with pytest.raises(ValueError, match="n_shards=8"):
+            other.run(docs, 1)
+        other.close()
+    resumed = CrawlEngine(spark, str(tmp_path), N_DOCS,
+                          host_budget=HOST_BUDGET, n_shards=8)
+    resumed.run(docs, 1)
+    resumed.close()
+    assert resumed.store.latest_generation() == 3
+
+
 def test_robots_disallowed_never_fetched(engine_result):
     _, log, seen = engine_result
     fetched_urls = {r[2] for r in log}
@@ -236,27 +260,36 @@ def test_cuckoo_never_loses_a_fingerprint():
     assert hits.all()  # zero false negatives, even past table capacity
 
 
-def test_cuckoo_spill_on_churn():
-    """build_shards spills a shard to cuckoo when its item count grew more
-    than the churn threshold since the previous rebuild."""
-    import pyspark.sql.functions as F  # noqa: F401
-
-    from akf_cdparser_spark.session import get_spark
-    spark = get_spark(master="local[2]")
-    seen = spark.createDataFrame(
-        [(hash64_py(fixtures.url_for(i)),) for i in range(600)],
-        "url_hash long")
-    calm = bloom.build_shards(seen, n_shards=4, prev_counts={s: 140 for s in range(4)})
-    assert {r.kind for r in calm.select("kind").collect()} == {"bloom2"}
-    churned = bloom.build_shards(seen, n_shards=4, prev_counts={s: 50 for s in range(4)})
-    assert {r.kind for r in churned.select("kind").collect()} == {"cuckoo2"}
+def test_cuckoo_spill_on_churn(spark):
+    """merge_run spills a shard to cuckoo when its delta grew it by more
+    than the churn threshold over its size in all live runs before the
+    delta (the folded runs' members plus the kept runs' n_items)."""
+    hashes = [(hash64_py(fixtures.url_for(i)),) for i in range(600)]
+    old = bloom.build_shards(
+        spark.createDataFrame(hashes[:300], "url_hash long"), n_shards=4)
+    delta = spark.createDataFrame(hashes[300:], "url_hash long")
+    big_keep = spark.createDataFrame(
+        [(s, None, None, 1000, "bloom2") for s in range(4)],
+        bloom.SHARD_SCHEMA)
+    # ~75 new hashes per shard over ~1075 before them: calm
+    calm = bloom.merge_run(delta, [old], [big_keep], n_shards=4).collect()
+    assert {r.kind for r in calm} == {"bloom2"}
+    # ~75 new over ~75 before them: churned
+    churned = bloom.merge_run(delta, [old], [], n_shards=4)
+    rows = churned.collect()
+    assert {r.kind for r in rows} == {"cuckoo2"}
+    assert sorted(h for r in rows
+                  for h in np.frombuffer(r.exact, dtype=np.int64)) == \
+        sorted(h for (h,) in hashes)
+    assert all(r.n_items == len(r.exact) // 8 for r in rows)
     # spilled shards still answer membership exactly
-    tagged = bloom.prefilter_candidates(
-        spark.createDataFrame([(hash64_py(fixtures.url_for(i)),)
-                               for i in range(1200)], "url_hash long"),
-        churned, n_shards=4)
-    rows = {r.url_hash: r.maybe_seen for r in tagged.collect()}
-    assert all(rows[hash64_py(fixtures.url_for(i))] for i in range(600))
+    cand = spark.createDataFrame(
+        [(hash64_py(fixtures.url_for(i)),) for i in range(1200)],
+        "url_hash long")
+    verdict = {r.url_hash: r.seen_asof
+               for r in bloom.probe_seen(cand, churned, n_shards=4).collect()}
+    assert [verdict[hash64_py(fixtures.url_for(i))] for i in range(1200)] \
+        == [True] * 600 + [False] * 600
 
 
 def test_canonicalize_rules():
